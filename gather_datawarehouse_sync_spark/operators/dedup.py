@@ -18,6 +18,8 @@ no driver materialization — so they scale with the cluster.
 from __future__ import annotations
 
 import math
+from fractions import Fraction
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -204,12 +206,9 @@ def jaccard_pairs_cached(
     )
     if base_t == threshold:
         return stored
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10_000)
+    num, den = _ratio(threshold)
     return stored.filter(
-        F.col("shared") * frac.denominator
-        >= (F.col("na") + F.col("nb") - F.col("shared")) * frac.numerator
+        F.col("shared") * den >= (F.col("na") + F.col("nb") - F.col("shared")) * num
     )
 
 
@@ -223,7 +222,8 @@ def jaccard_pairs(
 ) -> DataFrame:
     """EXACT token-set Jaccard-similar pairs ≥ ``threshold`` (Q42).
 
-    Adaptive strategy, both branches exact:
+    Adaptive strategy, both branches exact (see :func:`_jaccard_join`
+    for the gate):
 
     - **tiny vocabulary AND dense sets** (≤ ``bitset_vocab_limit``
       distinct shingles, average set covering ≥ ¼ of them): the corpus
@@ -233,64 +233,44 @@ def jaccard_pairs(
       each token set as a fixed-width bitmask and run an all-pairs
       broadcast nested-loop join with popcount intersection — pure
       whole-stage-codegen compute, no token-explosion shuffle.
-    - **everything else**: prefix filtering (PPJoin-family), below.
+    - **everything else**: prefix filtering (PPJoin-family,
+      :func:`jaccard_pairs_prefix`).
 
-    Vocabulary size alone is NOT the right gate: 2-gram shingles over a
-    31-word vocab give V = 931 (under any sane limit) but sets of ~50 —
-    5 % density — where all-pairs wastes its n²/2 popcounts on pairs a
-    selective prefix join never generates (measured at sf0.1, 5 000
-    docs, t=0.9: bitset 43 s vs prefix 13 s).  At 80 % density the same
-    corpus at 1-grams measures the other way (bitset ~1.5 s vs prefix
-    ~17 s at t=0.8) — the ¼ cutoff splits the measured endpoints.
-
-    The vocabulary probe is ONE bounded job: ``distinct().limit(V+1)``
-    over the exploded shingles — partial-distinct runs map-side and the
-    limit stops the job early on huge vocabularies, so the probe costs
-    about what an ``approx_count_distinct`` would.  The density probe
-    is a second bounded job over a 10 k-doc limit sample (a heuristic
-    plan choice, not a correctness input — both branches are exact),
-    and it only runs when the mask would span MULTIPLE words: at
-    V ≤ 64 the NLJ costs one AND+popcount per pair and bitset wins at
-    any density, so the common tiny-vocab regime pays zero extra jobs.
-    When the gate passes, the probe's rows ARE the vocabulary, so the
-    bitset branch skips its own collect.
+    Returns (a, b, shared, na, nb, jaccard) with a < b.
     """
-    vocab_rows = (
-        df.select(tokens(F.col(text_col)).alias("__toks"))
-        .select(
-            F.explode(shingles_from_tokens(F.col("__toks"), ngram)).alias(
-                "tok"
-            )
-        )
-        .distinct()
-        .limit(bitset_vocab_limit + 1)
-        .collect()
+    return _jaccard_join((df,), id_col, text_col, threshold, ngram, bitset_vocab_limit)
+
+
+def jaccard_pairs_between(
+    new: DataFrame,
+    reference: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.8,
+    ngram: int = 1,
+    bitset_vocab_limit: int = 1024,
+) -> DataFrame:
+    """EXACT cross-corpus token-set Jaccard pairs ≥ ``threshold``: one
+    row per (new doc, reference doc) match — the exact tier of
+    incremental "new crawl vs existing corpus" dedup (the sketch tier is
+    :func:`minhash_dedup_against`).
+
+    The same join and gate as :func:`jaccard_pairs`, limited to the
+    NEW × REFERENCE grid — computing the within-side pairs and
+    filtering them away would do ~3× the popcount work on a 60/40 split
+    and shuffle rows that are discarded by construction.  Both tiers
+    see the union of the two corpora: the bitmask tier indexes the
+    UNION vocabulary (both sides must index tokens identically) and
+    broadcasts the reference side; the prefix tier orders tokens by
+    document frequency over the union, so both sides share one total
+    order (any consistent order is correct; rarity maximizes pruning).
+
+    Returns (a, b, shared, na, nb, jaccard) with a = new id, b =
+    reference id (no a < b constraint — the sides orient the pair).
+    """
+    return _jaccard_join(
+        (new, reference), id_col, text_col, threshold, ngram, bitset_vocab_limit
     )
-    if 0 < len(vocab_rows) <= bitset_vocab_limit:
-        # single-mask-word vocab: the NLJ costs one AND+popcount per
-        # pair — bitset wins at any density, skip the density probe
-        # (this is the common 1-gram tiny-vocab regime; the probe job's
-        # fixed cost would be pure overhead on every call)
-        dense = len(vocab_rows) <= 64
-        if not dense:
-            avg_set = (
-                df.select(F.size(shingles(F.col(text_col), ngram)).alias("n"))
-                .filter(F.col("n") > 0)
-                .limit(10_000)
-                .agg(F.avg("n"))
-                .collect()[0][0]
-            )
-            dense = avg_set is not None and avg_set * 4 >= len(vocab_rows)
-        if dense:
-            return jaccard_pairs_bitset(
-                df,
-                id_col,
-                text_col,
-                threshold,
-                ngram,
-                _vocab=[r["tok"] for r in vocab_rows],
-            )
-    return jaccard_pairs_prefix(df, id_col, text_col, threshold, ngram)
 
 
 def jaccard_pairs_prefix(
@@ -300,49 +280,186 @@ def jaccard_pairs_prefix(
     threshold: float = 0.8,
     ngram: int = 1,
 ) -> DataFrame:
-    """EXACT Jaccard pairs via prefix filtering (PPJoin-family).
-
-    1. order every document's token set by ascending global document
-       frequency (rare tokens first — any consistent total order is
-       correct; rarity maximizes pruning);
-    2. two documents can only reach Jaccard ≥ t if their *prefixes* of
-       length ``n - ceil(t·n) + 1`` share a token, so the self-join runs
-       on exploded prefixes only — the O(df²) blowup on stop-words never
-       happens because frequent tokens land at the ends of the ordering;
-    3. candidates additionally pass the size filter ``t·na ≤ nb``;
-    4. exact verification via ``array_intersect`` on the full (distinct)
-       token arrays — per-pair linear, no extra shuffle.
-
-    The threshold compare is integer-exact: t is converted to a rational
-    num/den and applied as ``shared·den ≥ union·num``, so results
-    hash-match a SQL oracle computing the same ratio.
+    """EXACT Jaccard pairs via prefix filtering (PPJoin-family) — the
+    prefix tier of :func:`jaccard_pairs`, without the gate.
 
     Returns (a, b, shared, na, nb, jaccard) with a < b.
     """
-    from fractions import Fraction
+    return _prefix_pairs(_side_tokens((df,), id_col, text_col, ngram), True, threshold)
 
+
+def jaccard_pairs_bitset(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.8,
+    ngram: int = 1,
+    _vocab: list[str] | None = None,
+) -> DataFrame:
+    """EXACT Jaccard pairs for tiny vocabularies via bitmask
+    intersection — the bitset tier of :func:`jaccard_pairs`, without
+    the gate.  ``_vocab`` is the corpus vocabulary when the caller
+    already holds it (otherwise one job collects it).
+
+    Returns (a, b, shared, na, nb, jaccard) with a < b.
+    """
+    tok = _side_tokens((df,), id_col, text_col, ngram)
+    vocab = _vocab if _vocab is not None else _vocabulary(df, text_col, ngram)
+    return _bitset_pairs(tok, True, threshold, vocab)
+
+
+def _ratio(threshold: float) -> tuple[int, int]:
+    """``threshold`` as the integer rational ``(num, den)`` behind every
+    exact-Jaccard compare, ``shared·den ≥ union·num`` — integer-exact,
+    so results hash-match a SQL oracle computing the same ratio."""
     frac = Fraction(threshold).limit_denominator(10_000)
-    num, den = frac.numerator, frac.denominator
+    return frac.numerator, frac.denominator
 
-    tok = spread(df).select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), ngram).alias("toks")
-    ).filter(F.size("toks") > 0)
 
-    # global document frequency per token → rarity order
-    docfreq = (
-        tok.select("id", F.explode("toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
+def _vocabulary(
+    texts: DataFrame, text_col: str, ngram: int, limit: int | None = None
+) -> list[str]:
+    """Distinct shingles of ``texts``, at most ``limit`` of them — ONE
+    job: partial-distinct runs map-side and the limit stops the job
+    early on huge vocabularies, so the bounded probe costs about what an
+    ``approx_count_distinct`` would.  The tokenizer runs in its own
+    projection below the explode (``GenerateExec`` has no subexpression
+    elimination)."""
+    vocab = (
+        texts.select(tokens(F.col(text_col)).alias("__toks"))
+        .select(
+            F.explode(shingles_from_tokens(F.col("__toks"), ngram)).alias("tok")
+        )
+        .distinct()
     )
+    if limit is not None:
+        vocab = vocab.limit(limit)
+    return [r["tok"] for r in vocab.collect()]
+
+
+def _side_tokens(
+    frames: tuple[DataFrame, ...], id_col: str, text_col: str, ngram: int
+) -> DataFrame:
+    """(side, id, toks): the documents of both tiers, tokenized and
+    tagged by join side — side 0 is the whole corpus of a self-join or
+    ``new`` of a cross join, side 1 is ``reference``.  Token-less
+    documents pair with nothing and are dropped here."""
+    return reduce(
+        DataFrame.unionByName,
+        (
+            spread(df)
+            .select(
+                F.lit(side).alias("side"),
+                F.col(id_col).alias("id"),
+                shingles(F.col(text_col), ngram).alias("toks"),
+            )
+            .filter(F.size("toks") > 0)
+            for side, df in enumerate(frames)
+        ),
+    )
+
+
+def _join_sides(frame: DataFrame, self_join: bool) -> tuple[DataFrame, DataFrame]:
+    """The (a, b) inputs of a pair join: a self-join reads both from
+    the same frame, a cross join splits it by side tag."""
+    if self_join:
+        return frame, frame
+    return frame.filter(F.col("side") == 0), frame.filter(F.col("side") == 1)
+
+
+def _pair_filter(self_join: bool, num: int, den: int) -> Column:
+    """Exact pre-verification filter shared by both tiers: the size
+    filter t·max(na, nb) ≤ min(na, nb) (⇔ num·max ≤ den·min), plus
+    a < b on a self-join so each unordered pair is scored once."""
+    size_ok = F.greatest("na", "nb") * num <= F.least("na", "nb") * den
+    return (F.col("a") < F.col("b")) & size_ok if self_join else size_ok
+
+
+def _verified(pairs: DataFrame, shared: Column, num: int, den: int) -> DataFrame:
+    """Score candidate ``pairs`` by their exact intersection ``shared``
+    and keep those at ``shared·den ≥ union·num``."""
+    return (
+        pairs.withColumn("shared", shared)
+        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("shared"))
+        .filter(F.col("shared") * den >= F.col("union_n") * num)
+        .withColumn("jaccard", F.col("shared") / F.col("union_n"))
+        .select("a", "b", "shared", "na", "nb", "jaccard")
+    )
+
+
+def _jaccard_join(
+    frames: tuple[DataFrame, ...],
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    ngram: int,
+    bitset_vocab_limit: int,
+) -> DataFrame:
+    """The exact-Jaccard pair join behind :func:`jaccard_pairs` (one
+    frame: a self-join) and :func:`jaccard_pairs_between` (``new``,
+    ``reference``): gate, then one of two exact tiers.
+
+    Vocabulary size alone is NOT the right gate: 2-gram shingles over a
+    31-word vocab give V = 931 (under any sane limit) but sets of ~50 —
+    5 % density — where all-pairs wastes its n²/2 popcounts on pairs a
+    selective prefix join never generates (measured at sf0.1, 5 000
+    docs, t=0.9: bitset 43 s vs prefix 13 s).  At 80 % density the same
+    corpus at 1-grams measures the other way (bitset ~1.5 s vs prefix
+    ~17 s at t=0.8) — the ¼ cutoff splits the measured endpoints.
+
+    The vocabulary probe is ONE bounded job over the union of the
+    frames' text (:func:`_vocabulary`).  The density probe is a second
+    bounded job over a 10 k-doc limit sample (a heuristic plan choice,
+    not a correctness input — both branches are exact), and it only
+    runs when the mask would span MULTIPLE words: at V ≤ 64 the NLJ
+    costs one AND+popcount per pair and bitset wins at any density, so
+    the common tiny-vocab regime pays zero extra jobs.  When the gate
+    passes, the probe's rows ARE the vocabulary the bitset tier
+    indexes, so it needs no collect of its own.
+    """
+    texts = reduce(DataFrame.unionByName, (f.select(F.col(text_col)) for f in frames))
+    vocab = _vocabulary(texts, text_col, ngram, bitset_vocab_limit + 1)
+    tok = _side_tokens(frames, id_col, text_col, ngram)
+    self_join = len(frames) == 1
+    if 0 < len(vocab) <= bitset_vocab_limit:
+        dense = len(vocab) <= 64
+        if not dense:
+            avg_set = (
+                texts.select(F.size(shingles(F.col(text_col), ngram)).alias("n"))
+                .filter(F.col("n") > 0)
+                .limit(10_000)
+                .agg(F.avg("n"))
+                .collect()[0][0]
+            )
+            dense = avg_set is not None and avg_set * 4 >= len(vocab)
+        if dense:
+            return _bitset_pairs(tok, self_join, threshold, vocab)
+    return _prefix_pairs(tok, self_join, threshold)
+
+
+def _prefix_pairs(tok: DataFrame, self_join: bool, threshold: float) -> DataFrame:
+    """Prefix-filter tier (PPJoin-family) over :func:`_side_tokens`.
+
+    1. order every document's token set by ascending document frequency
+       over all sides (rare tokens first — any consistent total order is
+       correct; rarity maximizes pruning);
+    2. two documents can only reach Jaccard ≥ t if their *prefixes* of
+       length ``n - ceil(t·n) + 1`` share a token, so the pair join runs
+       on exploded prefixes only — the O(df²) blowup on stop-words never
+       happens because frequent tokens land at the ends of the ordering;
+    3. candidates additionally pass the size and positional filters;
+    4. exact verification via ``array_intersect`` on the full (distinct)
+       token arrays — per-pair linear, no extra shuffle.
+    """
+    num, den = _ratio(threshold)
+    ex = tok.select("side", "id", F.explode("toks").alias("tok"))
+    docfreq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ordered = (
-        tok.select("id", F.explode("toks").alias("tok"))
-        .join(docfreq, "tok")
-        .groupBy("id")
+        ex.join(docfreq, "tok")
+        .groupBy("side", "id")
         .agg(
             F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("df"), F.col("tok")))
-                ),
+                F.array_sort(F.collect_list(F.struct(F.col("df"), F.col("tok")))),
                 lambda s: s["tok"],
             ).alias("toks")
         )
@@ -357,12 +474,13 @@ def jaccard_pairs_prefix(
     # prefix length p = n - ceil(t*n) + 1, computed in integer arithmetic
     p = F.expr(f"n - ((n * {num} + {den} - 1) DIV {den}) + 1")
     prefixes = ordered.select(
-        "id", "n", F.posexplode(F.slice("toks", 1, p)).alias("pos", "tok")
+        "side", "id", "n", F.posexplode(F.slice("toks", 1, p)).alias("pos", "tok")
     )
-    a = prefixes.select(
+    pa, pb = _join_sides(prefixes, self_join)
+    a = pa.select(
         F.col("id").alias("a"), F.col("n").alias("na"), F.col("pos").alias("pa"), "tok"
     )
-    b = prefixes.select(
+    b = pb.select(
         F.col("id").alias("b"), F.col("n").alias("nb"), F.col("pos").alias("pb"), "tok"
     )
     # candidate pairs carry only (id, id, n, n): on clique-heavy corpora a
@@ -378,9 +496,7 @@ def jaccard_pairs_prefix(
     cand = (
         a.join(b, "tok")
         .filter(
-            (F.col("a") < F.col("b"))
-            # size filter: t·max ≤ min  ⇔  num·max ≤ den·min
-            & (F.greatest("na", "nb") * num <= F.least("na", "nb") * den)
+            _pair_filter(self_join, num, den)
             # positional filter: ubound·(num+den) ≥ num·(na+nb)
             & (
                 F.least(F.col("na") - F.col("pa"), F.col("nb") - F.col("pb"))
@@ -393,57 +509,33 @@ def jaccard_pairs_prefix(
     )
     # re-attach token arrays for verification; the docs side is one row
     # per document (no explosion), so AQE broadcasts it when small
-    ta = ordered.select(F.col("id").alias("a"), F.col("toks").alias("ta"))
-    tb = ordered.select(F.col("id").alias("b"), F.col("toks").alias("tb"))
-    shared = F.size(F.array_intersect("ta", "tb"))
-    out = (
-        cand.join(ta, "a")
-        .join(tb, "b")
-        .withColumn("shared", shared)
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("shared"))
-        .filter(F.col("shared") * den >= F.col("union_n") * num)
-        .withColumn("jaccard", F.col("shared") / F.col("union_n"))
+    oa, ob = _join_sides(ordered, self_join)
+    ta = oa.select(F.col("id").alias("a"), F.col("toks").alias("ta"))
+    tb = ob.select(F.col("id").alias("b"), F.col("toks").alias("tb"))
+    return _verified(
+        cand.join(ta, "a").join(tb, "b"),
+        F.size(F.array_intersect("ta", "tb")),
+        num,
+        den,
     )
-    return out.select("a", "b", "shared", "na", "nb", "jaccard")
 
 
-def jaccard_pairs_bitset(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    ngram: int = 1,
-    _vocab: list[str] | None = None,
+def _bitset_pairs(
+    tok: DataFrame, self_join: bool, threshold: float, vocab: list[str]
 ) -> DataFrame:
-    """EXACT Jaccard pairs for tiny vocabularies via bitmask intersection.
+    """Bitmask tier over :func:`_side_tokens`, for tiny vocabularies.
 
-    Token sets over a vocabulary of V distinct shingles are encoded as
-    ``ceil(V/64)`` 64-bit words; the pair join is a broadcast
+    Token sets over a vocabulary of V distinct shingles (``vocab``, the
+    union over all sides, so both sides index tokens identically) are
+    encoded as ``ceil(V/64)`` 64-bit words; the pair join is a broadcast
     nested-loop all-pairs join whose per-pair cost is a handful of
-    AND+popcount ops inside whole-stage codegen.  When V is tiny the true
-    result is near-quadratic anyway, so all-pairs *is* the output
+    AND+popcount ops inside whole-stage codegen.  When V is tiny the
+    true result is near-quadratic anyway, so all-pairs *is* the output
     complexity — the win over the token-explosion plan is removing the
     O(Σ df²) shuffle entirely.
     """
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10_000)
-    num, den = frac.numerator, frac.denominator
-
-    tok = spread(df).select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), ngram).alias("toks")
-    ).filter(F.size("toks") > 0)
-    ex = tok.select("id", F.explode("toks").alias("tok"))
-
-    # vocabulary index: tiny by precondition (≤ bitset_vocab_limit rows),
-    # so COLLECT it — ``_vocab`` is the adaptive dispatcher's probe
-    # result passed through so the dispatched path pays zero extra jobs.
-    vocab_list = (
-        _vocab
-        if _vocab is not None
-        else [r["tok"] for r in ex.select("tok").distinct().collect()]
-    )
-    tok2idx = {t: i for i, t in enumerate(sorted(vocab_list))}
+    num, den = _ratio(threshold)
+    tok2idx = {t: i for i, t in enumerate(sorted(vocab))}
     width = max(1, (len(tok2idx) + 63) // 64)
     if width == 1:
         # single-word vocab (V ≤ 64): the mask is a FLAT PROJECTION —
@@ -456,7 +548,8 @@ def jaccard_pairs_bitset(
         # scan).  n = size(toks): shingles() output is distinct and
         # the vocabulary covers it by construction.  Per-doc cost is
         # V·|toks| codegen string compares — bounded by 64·|toks|.
-        docs = tok.select(
+        masks = tok.select(
+            "side",
             "id",
             F.array(
                 sum(
@@ -471,15 +564,19 @@ def jaccard_pairs_bitset(
                 )
             ).alias("mask"),
             F.size("toks").alias("n"),
-        ).localCheckpoint(eager=True)
+        )
     else:
         # multi-word vocab: broadcast hash join against the collected
         # index — O(1) per token, one tiny broadcast, no shuffle
-        vocab_df = df.sparkSession.createDataFrame(
+        vocab_df = tok.sparkSession.createDataFrame(
             list(tok2idx.items()), "tok string, idx int"
         )
-        indexed = ex.join(F.broadcast(vocab_df), "tok").select("id", "idx")
-        idxed = indexed.groupBy("id").agg(F.collect_set("idx").alias("idxs"))
+        idxed = (
+            tok.select("side", "id", F.explode("toks").alias("tok"))
+            .join(F.broadcast(vocab_df), "tok")
+            .groupBy("side", "id")
+            .agg(F.collect_set("idx").alias("idxs"))
+        )
         # SQL expr because pyspark's shiftleft() wrapper rejects Column
         # numBits
         mask = F.expr(
@@ -487,20 +584,20 @@ def jaccard_pairs_bitset(
             "aggregate(filter(idxs, i -> i div 64 = w), 0L, "
             "(acc, i) -> acc | shiftleft(1L, int(i % 64))))"
         )
-        # materialize the narrow mask table once: it feeds BOTH sides of
-        # the all-pairs join below, and a checkpointed RDD makes the
-        # spread() partition probe free
-        docs = idxed.select(
-            "id", mask.alias("mask"), F.size("idxs").alias("n")
-        ).localCheckpoint(eager=True)
-
+        masks = idxed.select(
+            "side", "id", mask.alias("mask"), F.size("idxs").alias("n")
+        )
+    # materialize the narrow mask table once: it feeds BOTH sides of the
+    # all-pairs join below, and a checkpointed RDD makes the spread()
+    # partition probe free
+    ma, mb = _join_sides(masks.localCheckpoint(eager=True), self_join)
     # AQE coalesces the small post-shuffle doc table to one partition,
     # which would serialize the O(n²) popcount loop onto a single core —
     # spread the probe side so the broadcast NLJ fans out
-    a = spread(docs).select(
+    a = spread(ma).select(
         F.col("id").alias("a"), F.col("mask").alias("ma"), F.col("n").alias("na")
     )
-    b = docs.select(
+    b = mb.select(
         F.col("id").alias("b"), F.col("mask").alias("mb"), F.col("n").alias("nb")
     )
     # popcount as an UNROLLED sum over the mask words — ``width`` is known
@@ -518,302 +615,8 @@ def jaccard_pairs_bitset(
         ),
         start=F.bit_count(F.col("ma").getItem(0).bitwiseAND(F.col("mb").getItem(0))),
     )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .filter(
-            (F.col("a") < F.col("b"))
-            & (F.greatest("na", "nb") * num <= F.least("na", "nb") * den)
-        )
-        .withColumn("shared", shared)
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("shared"))
-        .filter(F.col("shared") * den >= F.col("union_n") * num)
-        .withColumn("jaccard", F.col("shared") / F.col("union_n"))
-    )
-    return pairs.select("a", "b", "shared", "na", "nb", "jaccard")
-
-
-def jaccard_pairs_between(
-    new: DataFrame,
-    reference: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    ngram: int = 1,
-    bitset_vocab_limit: int = 1024,
-) -> DataFrame:
-    """EXACT cross-corpus token-set Jaccard pairs ≥ ``threshold``: one
-    row per (new doc, reference doc) match — the exact tier of
-    incremental "new crawl vs existing corpus" dedup (the sketch tier is
-    :func:`minhash_dedup_against`).
-
-    Same adaptive strategy pair as :func:`jaccard_pairs`, specialized to
-    score only the NEW × REFERENCE grid — computing the within-side
-    pairs and filtering them away would do ~3× the popcount work on a
-    60/40 split and shuffle rows that are discarded by construction:
-
-    - **tiny vocabulary AND dense sets**: bitmask encoding over the
-      UNION vocabulary (both sides must index tokens identically); the
-      reference side broadcasts and the new side streams through the
-      codegen'd AND+popcount cross join.
-    - **everything else**: PPJoin prefix filtering with the a-side
-      prefixes drawn from ``new`` and the b-side from ``reference``;
-      the document-frequency ordering is computed over the union so
-      both sides share one total order (any consistent order is
-      correct; rarity maximizes pruning).
-
-    The gate is the same two-signal probe as :func:`jaccard_pairs`
-    (vocab ≤ limit AND average set ≥ ¼ of it, sampled bounded): size
-    alone mis-routes sparse-set corpora into the all-pairs tier.
-
-    Returns (a, b, shared, na, nb, jaccard) with a = new id, b =
-    reference id (no a < b constraint — the sides orient the pair).
-    """
-    union_text = new.select(F.col(text_col)).unionByName(
-        reference.select(F.col(text_col))
-    )
-    # one bounded job: the probe rows double as the union vocabulary
-    # when the gate passes (see jaccard_pairs)
-    vocab_rows = (
-        union_text.select(tokens(F.col(text_col)).alias("__toks"))
-        .select(
-            F.explode(shingles_from_tokens(F.col("__toks"), ngram)).alias(
-                "tok"
-            )
-        )
-        .distinct()
-        .limit(bitset_vocab_limit + 1)
-        .collect()
-    )
-    if 0 < len(vocab_rows) <= bitset_vocab_limit:
-        # V ≤ 64 → one mask word → bitset at any density (no probe job)
-        dense = len(vocab_rows) <= 64
-        if not dense:
-            avg_set = (
-                union_text.select(
-                    F.size(shingles(F.col(text_col), ngram)).alias("n")
-                )
-                .filter(F.col("n") > 0)
-                .limit(10_000)
-                .agg(F.avg("n"))
-                .collect()[0][0]
-            )
-            dense = avg_set is not None and avg_set * 4 >= len(vocab_rows)
-        if dense:
-            return _jaccard_between_bitset(
-                new,
-                reference,
-                id_col,
-                text_col,
-                threshold,
-                ngram,
-                [r["tok"] for r in vocab_rows],
-            )
-    return _jaccard_between_prefix(
-        new, reference, id_col, text_col, threshold, ngram
-    )
-
-
-def _jaccard_between_bitset(
-    new: DataFrame,
-    reference: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    ngram: int,
-    _vocab: list[str] | None = None,
-) -> DataFrame:
-    """Bitmask branch of :func:`jaccard_pairs_between` (tiny union
-    vocabulary): masks index the union vocab, the reference side
-    broadcasts, per-pair cost is the unrolled AND+popcount."""
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10_000)
-    num, den = frac.numerator, frac.denominator
-
-    def _tok(df: DataFrame) -> DataFrame:
-        return (
-            spread(df)
-            .select(
-                F.col(id_col).alias("id"),
-                shingles(F.col(text_col), ngram).alias("toks"),
-            )
-            .filter(F.size("toks") > 0)
-        )
-
-    tok_n, tok_r = _tok(new), _tok(reference)
-    ex_n = tok_n.select("id", F.explode("toks").alias("tok"))
-    ex_r = tok_r.select("id", F.explode("toks").alias("tok"))
-    # union vocabulary, collected (tiny by precondition); BOTH sides
-    # must index tokens identically, which one shared index gives by
-    # construction.  ``_vocab`` is the dispatcher's probe result.
-    vocab_list = (
-        _vocab
-        if _vocab is not None
-        else [
-            r["tok"]
-            for r in ex_n.select("tok").union(ex_r.select("tok")).distinct().collect()
-        ]
-    )
-    tok2idx = {t: i for i, t in enumerate(sorted(vocab_list))}
-    width = max(1, (len(tok2idx) + 63) // 64)
-    if width == 1:
-        # single-word vocab: flat projection mask — one codegen'd
-        # array_contains per vocab word OR-summed into the word, no
-        # explode/index/groupBy round trip (the jaccard_pairs_bitset
-        # r18 form; n = size(toks) because shingles() is distinct and
-        # the union vocabulary covers both sides by construction)
-        def _masks(tok_side: DataFrame) -> DataFrame:
-            return tok_side.select(
-                "id",
-                F.array(
-                    sum(
-                        (
-                            F.when(
-                                F.array_contains(F.col("toks"), w),
-                                F.lit(1 << i).cast("long"),
-                            ).otherwise(F.lit(0).cast("long"))
-                            for w, i in sorted(tok2idx.items())
-                        ),
-                        start=F.lit(0).cast("long"),
-                    )
-                ).alias("mask"),
-                F.size("toks").alias("n"),
-            ).localCheckpoint(eager=True)
-
-        masks_n, masks_r = _masks(tok_n), _masks(tok_r)
-    else:
-        vocab_df = new.sparkSession.createDataFrame(
-            list(tok2idx.items()), "tok string, idx int"
-        )
-
-        def _indexed(ex: DataFrame) -> DataFrame:
-            return ex.join(F.broadcast(vocab_df), "tok").select("id", "idx")
-
-        mask = F.expr(
-            f"transform(sequence(0, {width - 1}), w -> "
-            "aggregate(filter(idxs, i -> i div 64 = w), 0L, "
-            "(acc, i) -> acc | shiftleft(1L, int(i % 64))))"
-        )
-
-        def _masks_join(ex: DataFrame) -> DataFrame:
-            return (
-                _indexed(ex)
-                .groupBy("id")
-                .agg(F.collect_set("idx").alias("idxs"))
-                .select("id", mask.alias("mask"), F.size("idxs").alias("n"))
-                .localCheckpoint(eager=True)
-            )
-
-        masks_n, masks_r = _masks_join(ex_n), _masks_join(ex_r)
-
-    a = spread(masks_n).select(
-        F.col("id").alias("a"), F.col("mask").alias("ma"), F.col("n").alias("na")
-    )
-    b = masks_r.select(
-        F.col("id").alias("b"), F.col("mask").alias("mb"), F.col("n").alias("nb")
-    )
-    shared = sum(
-        (
-            F.bit_count(F.col("ma").getItem(w).bitwiseAND(F.col("mb").getItem(w)))
-            for w in range(1, width)
-        ),
-        start=F.bit_count(F.col("ma").getItem(0).bitwiseAND(F.col("mb").getItem(0))),
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.greatest("na", "nb") * num <= F.least("na", "nb") * den)
-        .withColumn("shared", shared)
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("shared"))
-        .filter(F.col("shared") * den >= F.col("union_n") * num)
-        .withColumn("jaccard", F.col("shared") / F.col("union_n"))
-    )
-    return pairs.select("a", "b", "shared", "na", "nb", "jaccard")
-
-
-def _jaccard_between_prefix(
-    new: DataFrame,
-    reference: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    ngram: int,
-) -> DataFrame:
-    """PPJoin-prefix branch of :func:`jaccard_pairs_between`: the
-    document-frequency rarity order comes from the union corpus so both
-    sides explode prefixes under one consistent total order; candidate
-    generation joins new-side prefixes against reference-side prefixes
-    only."""
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10_000)
-    num, den = frac.numerator, frac.denominator
-
-    def _tok(df: DataFrame, side: str) -> DataFrame:
-        return (
-            spread(df)
-            .select(
-                F.lit(side).alias("side"),
-                F.col(id_col).alias("id"),
-                shingles(F.col(text_col), ngram).alias("toks"),
-            )
-            .filter(F.size("toks") > 0)
-        )
-
-    tok = _tok(new, "n").unionByName(_tok(reference, "r"))
-    ex = tok.select("side", "id", F.explode("toks").alias("tok"))
-    docfreq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    ordered = (
-        ex.join(docfreq, "tok")
-        .groupBy("side", "id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("df"), F.col("tok")))),
-                lambda s: s["tok"],
-            ).alias("toks")
-        )
-        .withColumn("n", F.size("toks"))
-        # feeds prefix explosion (both sides) and both verify attaches
-        .localCheckpoint(eager=True)
-    )
-    p = F.expr(f"n - ((n * {num} + {den} - 1) DIV {den}) + 1")
-    prefixes = ordered.select(
-        "side", "id", "n", F.posexplode(F.slice("toks", 1, p)).alias("pos", "tok")
-    )
-    a = prefixes.filter(F.col("side") == "n").select(
-        F.col("id").alias("a"), F.col("n").alias("na"), F.col("pos").alias("pa"), "tok"
-    )
-    b = prefixes.filter(F.col("side") == "r").select(
-        F.col("id").alias("b"), F.col("n").alias("nb"), F.col("pos").alias("pb"), "tok"
-    )
-    cand = (
-        a.join(b, "tok")
-        .filter(
-            (F.greatest("na", "nb") * num <= F.least("na", "nb") * den)
-            & (
-                F.least(F.col("na") - F.col("pa"), F.col("nb") - F.col("pb"))
-                * (num + den)
-                >= (F.col("na") + F.col("nb")) * num
-            )
-        )
-        .select("a", "b", "na", "nb")
-        .dropDuplicates(["a", "b"])
-    )
-    ta = ordered.filter(F.col("side") == "n").select(
-        F.col("id").alias("a"), F.col("toks").alias("ta")
-    )
-    tb = ordered.filter(F.col("side") == "r").select(
-        F.col("id").alias("b"), F.col("toks").alias("tb")
-    )
-    shared = F.size(F.array_intersect("ta", "tb"))
-    out = (
-        cand.join(ta, "a")
-        .join(tb, "b")
-        .withColumn("shared", shared)
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("shared"))
-        .filter(F.col("shared") * den >= F.col("union_n") * num)
-        .withColumn("jaccard", F.col("shared") / F.col("union_n"))
-    )
-    return out.select("a", "b", "shared", "na", "nb", "jaccard")
+    pairs = a.crossJoin(F.broadcast(b)).filter(_pair_filter(self_join, num, den))
+    return _verified(pairs, shared, num, den)
 
 
 # ---------------------------------------------------------------------------
@@ -978,6 +781,32 @@ def minhash_signatures(
     )
 
 
+def _band_buckets(bands: int, rows_per_band: int) -> Column:
+    """``posexplode`` of the ``signature`` column's LSH band buckets —
+    (band, bucket) rows, one per band.
+
+    bucket = xxhash64 over the band's lane VALUES directly (variadic
+    long hashing, r18): the former form rendered every lane to a
+    string and concatenated before hashing — 64 long→string casts and
+    a string build per signature, pure runtime overhead.  Equal bands
+    hash equal either way; unequal-band collisions stay in the same
+    documented 2⁻⁶⁴ budget the banding tier always had (the DuckDB
+    oracles band by exact lane equality, unchanged)."""
+    return F.posexplode(
+        F.array(
+            *[
+                F.xxhash64(
+                    *[
+                        F.element_at(F.col("signature"), i * rows_per_band + j + 1)
+                        for j in range(rows_per_band)
+                    ]
+                )
+                for i in range(bands)
+            ]
+        )
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1012,30 +841,8 @@ def minhash_lsh_pairs(
         .filter(F.col("signature").isNotNull())
         .localCheckpoint(eager=True)
     )
-    # bucket = xxhash64 over the band's lane VALUES directly (variadic
-    # long hashing, r18): the former form rendered every lane to a
-    # string and concatenated before hashing — 64 long→string casts and
-    # a string build per signature, pure runtime overhead.  Equal bands
-    # hash equal either way; unequal-band collisions stay in the same
-    # documented 2⁻⁶⁴ budget the banding tier always had (the DuckDB
-    # oracles band by exact lane equality, unchanged).
     banded = sig.select(
-        "id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        *[
-                            F.element_at(
-                                F.col("signature"), i * rows_per_band + j + 1
-                            )
-                            for j in range(rows_per_band)
-                        ]
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
+        "id", _band_buckets(bands, rows_per_band).alias("band", "bucket")
     )
     # candidate pairs stay NARROW (id, id): on clique-heavy corpora the
     # same pair collides in many bands and every band bucket of size k
@@ -1174,26 +981,7 @@ def minhash_dedup_against(
     def _banded(reps: DataFrame, alias: str) -> DataFrame:
         return reps.select(
             F.col("skey").alias(alias),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                F.transform(
-                                    F.slice(
-                                        F.col("signature"),
-                                        i * rows_per_band + 1,
-                                        rows_per_band,
-                                    ),
-                                    lambda x: x.cast("string"),
-                                ),
-                            )
-                        )
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("band", "bucket"),
+            _band_buckets(bands, rows_per_band).alias("band", "bucket"),
         )
 
     if reference is None and reference_signatures is None:
@@ -2383,7 +2171,6 @@ def cut_duplicate_spans(
 
 def frequent_units(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = " ",
     min_docs: int | None = None,
@@ -2391,9 +2178,13 @@ def frequent_units(
 ) -> DataFrame:
     """The frequent-unit (boilerplate) set :func:`remove_frequent_units`
     cuts against: every non-empty ``sep``-delimited unit occurring in at
-    least the threshold number of DISTINCT documents — exactly one of
+    least the threshold number of documents — exactly one of
     ``min_docs`` (absolute) and ``min_doc_frac_bp`` (basis points of the
     corpus document count, scale-invariant) selects it.
+
+    Precondition: ONE input row per document.  Units are counted per
+    row (``COUNT(*)`` over per-row distinct units), so a document that
+    appears in several rows counts once per row.
 
     Split out so the set can be PERSISTED per corpus version (the
     :func:`reference_gram_keys` pattern): a daily increment is then
@@ -2415,8 +2206,9 @@ def frequent_units(
     # once — duplicate occurrences within a document never shuffle —
     # and the two-exchange distinct-aggregate plan collapses to one
     # map-side-combinable hash aggregate (guide §2.3/§2.4, r19).
-    # Exact: rows are distinct per doc by construction and ids differ
-    # across docs, so COUNT(*) per unit ≡ COUNT(DISTINCT id).
+    # Exact under the one-row-per-document precondition: units are
+    # distinct per row by construction, so COUNT(*) per unit is the
+    # number of documents containing it.
     units = spread(df).select(
         F.explode(
             F.array_distinct(F.split(F.col(text_col), pattern))
@@ -2455,8 +2247,9 @@ def remove_frequent_units(
 ) -> DataFrame:
     """Corpus-frequency boilerplate removal: a unit (the text split on
     ``sep`` — lines, paragraphs, or tokens by choice of separator) that
-    occurs in at least a threshold number of DISTINCT documents is cut
-    from every document; the surviving units rejoin in original order.
+    occurs in at least a threshold number of documents (precondition:
+    ONE input row per document — :func:`frequent_units` counts rows) is
+    cut from every document; the surviving units rejoin in original order.
     This is CCNet's paragraph-level dedup / RefinedWeb's line-level
     dedup (navigation menus, cookie banners, boilerplate headers appear
     near-verbatim across thousands of pages — cutting the unit keeps
@@ -2469,7 +2262,7 @@ def remove_frequent_units(
     units (doubled/trailing separators) are never counted and never
     cut, so spacing survives the round trip byte-identically.
 
-    Plan shape: one posexplode pass, one (unit → distinct-doc count)
+    Plan shape: one posexplode pass, one (unit → document count)
     aggregation with map-side partial aggs, the frequent set anti-joined
     back (broadcast by default — a unit must clear the document
     threshold, so at boilerplate-grade thresholds the set is tiny; pass
@@ -2498,7 +2291,11 @@ def remove_frequent_units(
             )
     else:
         frequent = frequent_units(
-            df, id_col, text_col, sep, min_docs, min_doc_frac_bp
+            df,
+            text_col=text_col,
+            sep=sep,
+            min_docs=min_docs,
+            min_doc_frac_bp=min_doc_frac_bp,
         )
     pattern = _re.escape(sep)
     units = spread(df).select(

@@ -70,9 +70,3 @@ def path_categories(
         F.concat(F.col("parent"), F.lit("/")).alias("path"),
         "depth",
     )
-
-
-def prefix_rollup(df: DataFrame, *cols: str) -> DataFrame:
-    """Hierarchical rollup over categorical levels (Q36 shape): counts at
-    every prefix of the level list, via Spark's native ``rollup``."""
-    return df.rollup(*cols).agg(F.count(F.lit(1)).alias("c"))

@@ -67,10 +67,6 @@ def broadcast_join_count(df: DataFrame) -> int:
     return len(re.findall(r"BroadcastHashJoin", plan_str(df, "simple")))
 
 
-def sortmerge_join_count(df: DataFrame) -> int:
-    return len(re.findall(r"SortMergeJoin", plan_str(df, "simple")))
-
-
 def codegen_stage_count(df: DataFrame, execute: bool = True) -> int:
     """Whole-stage-codegen span count; fused JVM loops.  A plan whose
     hot path sits inside few wide spans beats one fragmented by

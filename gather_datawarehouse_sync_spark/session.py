@@ -96,8 +96,13 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 # the oracle hashes pin that).  Keyed by applicationId, NOT
 # id(session) — id() can be recycled after a session is GC'd (r18
 # advice); bounded, and flushed whenever a schema cache detects a
-# changed file set (``_invalidate_spread_cache``), so a regenerated
-# input cannot serve a stale count for the process lifetime.
+# changed file set (``_invalidate_spread_cache``).  That detection
+# covers single-file tables (``load_table``'s stat fingerprint) and
+# artifact directories (``read_table``'s directory fingerprint) only:
+# ``load_table``'s directory layouts (``key=None``) never flush, so a
+# regenerated directory source CAN serve a stale count until the cache
+# fills or the process ends — a mis-sized repartition, performance
+# only.
 _SPREAD_NPART_CACHE: dict[tuple[str, int], int] = {}
 _SPREAD_NPART_CACHE_MAX = 4096
 

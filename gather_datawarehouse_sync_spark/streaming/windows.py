@@ -129,7 +129,7 @@ def stateful_running_totals(
     if not events.isStreaming:
         # coalesce to 0.0 for stream parity: an all-NULL-value key sums
         # to NULL here, while the streaming path's pandas sum over an
-        # all-NaN series returns 0.0 (skipna) (v1 and v2 share this contract)
+        # all-NaN series returns 0.0 (skipna)
         return events.groupBy(key_col).agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
@@ -158,68 +158,6 @@ def stateful_running_totals(
             stateStructType="n bigint, total double",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def stateful_running_totals_v2(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """The same per-key accumulator on the state-v2 API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``/ValueState) —
-    Spark 4's forward path for custom stateful operators: typed state
-    handles, per-state TTL, timers, and RocksDB-backed stores instead of
-    the single opaque tuple of ``applyInPandasWithState``.  Batch input
-    falls back to the same plain aggregation (identical results, tested
-    against the v1 operator).
-
-    Environment gate: the state-v2 Python runner requires a working
-    ``google.protobuf``; the test importorskips where absent (this
-    container), and the v1 operator above remains the tested default.
-    Output key type derives from the input schema (see v1)."""
-    key_t = events.schema[key_col].dataType.simpleString()
-    out_schema = f"{key_col} {key_t}, n bigint, total double"
-
-    if not events.isStreaming:
-        # coalesce to 0.0 for stream parity: an all-NULL-value key sums
-        # to NULL here, while the streaming path's pandas sum over an
-        # all-NaN series returns 0.0 (skipna) (v1 and v2 share this contract)
-        return events.groupBy(key_col).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.col(value_col).cast("double")), F.lit(0.0)
-            ).alias("total"),
-        )
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n bigint, total double")
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf[value_col].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame({key_col: [key[0]], "n": [n], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            _RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

@@ -287,13 +287,13 @@ def test_jaccard_dispatch_density_gate(spark, monkeypatch):
     import gather_datawarehouse_sync_spark.operators.dedup as D
 
     picked = []
-    real_bitset, real_prefix = D.jaccard_pairs_bitset, D.jaccard_pairs_prefix
+    real_bitset, real_prefix = D._bitset_pairs, D._prefix_pairs
     monkeypatch.setattr(
-        D, "jaccard_pairs_bitset",
+        D, "_bitset_pairs",
         lambda *a, **k: picked.append("bitset") or real_bitset(*a, **k),
     )
     monkeypatch.setattr(
-        D, "jaccard_pairs_prefix",
+        D, "_prefix_pairs",
         lambda *a, **k: picked.append("prefix") or real_prefix(*a, **k),
     )
     dense = spark.createDataFrame(_DOCS, "doc_id long, text string")

@@ -1235,12 +1235,15 @@ def test_jaccard_tiers_match_bruteforce_oracle(spark, docs, threshold):
     definition for ANY corpus and threshold — duplicate tokens
     collapse to sets, empty/token-less docs pair with nothing, the
     compare is integer-exact at the engine's Fraction conversion, and
-    the two physical strategies are interchangeable by construction."""
+    the two physical strategies are interchangeable by construction.
+    The cross-corpus join (even ids new, odd ids reference) equals the
+    same definition over the new × reference grid on both tiers."""
     import re
     from fractions import Fraction
 
     from gather_datawarehouse_sync_spark.operators.dedup import (
         jaccard_pairs,
+        jaccard_pairs_between,
         jaccard_pairs_bitset,
         jaccard_pairs_prefix,
     )
@@ -1257,19 +1260,33 @@ def test_jaccard_tiers_match_bruteforce_oracle(spark, docs, threshold):
         i: {w for w in re.split(r"[^a-z0-9]+", t.lower()) if w}
         for i, t in docs
     }
-    want = {
-        (a, b)
-        for a in sets
-        for b in sets
-        if a < b
-        and sets[a]
-        and sets[b]
-        and len(sets[a] & sets[b]) * frac.denominator
-        >= frac.numerator * len(sets[a] | sets[b])
-    }
+
+    def similar(a, b):
+        return (
+            sets[a]
+            and sets[b]
+            and len(sets[a] & sets[b]) * frac.denominator
+            >= frac.numerator * len(sets[a] | sets[b])
+        )
+
+    want = {(a, b) for a in sets for b in sets if a < b and similar(a, b)}
     for name, fn in tiers.items():
         got = {(r["a"], r["b"]) for r in fn(df, **kw).collect()}
         assert got == want, (name, got, want)
+
+    want_x = {
+        (a, b)
+        for a in sets
+        for b in sets
+        if a % 2 == 0 and b % 2 == 1 and similar(a, b)
+    }
+    new, ref = df.filter(df.doc_id % 2 == 0), df.filter(df.doc_id % 2 == 1)
+    # a vocabulary of at most 5 words takes the bitset tier; a limit of
+    # 0 forces the prefix tier
+    for limit in (1024, 0):
+        between = jaccard_pairs_between(new, ref, bitset_vocab_limit=limit, **kw)
+        got = {(r["a"], r["b"]) for r in between.collect()}
+        assert got == want_x, (limit, got, want_x)
 
 
 _chunk_docs = st.lists(

@@ -241,36 +241,6 @@ def test_snapshot_inventory(spark, tmp_path):
     assert rows[0]["size"] == 5
 
 
-def test_stateful_running_totals_v2_matches_v1(spark, event_source, tmp_path):
-    # the state-v2 runner speaks protobuf to the JVM; skip where the
-    # container ships no usable google.protobuf (operator is gated, not
-    # stubbed — on a normal cluster this test runs).  Unskipping was
-    # investigated (r14): no protobuf wheel or runtime exists anywhere
-    # on this box (only typeshed stubs and pyspark's from_protobuf SQL
-    # module), installs are disallowed, and the runtime cannot be
-    # shimmed — transformWithStateInPandas' worker protocol needs real
-    # descriptor/message machinery.  The gate stays environmental.
-    pytest.importorskip("google.protobuf.descriptor")
-    from gather_datawarehouse_sync_spark.streaming.windows import (
-        stateful_running_totals_v2,
-    )
-
-    path, batch = event_source
-    got = _run_stream(
-        spark,
-        tmp_path,
-        stateful_running_totals_v2(_read_stream(spark, path)),
-        "t_state_v2",
-        "update",
-    )
-    final = {r["user_id"]: (r["n"], r["total"]) for r in got.collect()}
-    want = {
-        r["user_id"]: (r["n"], r["total"])
-        for r in stateful_running_totals(batch).collect()
-    }
-    assert final == want
-
-
 def test_interval_join_stream_matches_batch(spark, event_source, tmp_path):
     from gather_datawarehouse_sync_spark.streaming import interval_join
 
@@ -1796,14 +1766,15 @@ def test_running_totals_all_null_values_batch_matches_stream_semantics(spark):
     review find)."""
     from gather_datawarehouse_sync_spark.streaming.windows import (
         stateful_running_totals,
-        stateful_running_totals_v2,
     )
 
     df = spark.createDataFrame(
         [("u1", 1, None), ("u1", 2, None), ("u2", 3, 5.0)],
         "user_id string, ts long, value double",
     )
-    for fn in (stateful_running_totals, stateful_running_totals_v2):
-        rows = {r["user_id"]: (r["n"], r["total"]) for r in fn(df).collect()}
-        assert rows["u1"] == (2, 0.0), rows
-        assert rows["u2"] == (1, 5.0), rows
+    rows = {
+        r["user_id"]: (r["n"], r["total"])
+        for r in stateful_running_totals(df).collect()
+    }
+    assert rows["u1"] == (2, 0.0), rows
+    assert rows["u2"] == (1, 5.0), rows

@@ -29,15 +29,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from gather_datawarehouse_sync_spark.plans.inspect import plan_str  # noqa: E402
 from gather_datawarehouse_sync_spark.queries import REGISTRY  # noqa: E402
 from gather_datawarehouse_sync_spark.session import get_spark  # noqa: E402
-
-
-def formatted_plan(df) -> str:
-    """Capture explain("formatted") as a string (Spark 4 classic)."""
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
 
 
 def main() -> None:
@@ -95,7 +89,7 @@ def main() -> None:
                 with open(
                     os.path.join(args.plans, f"{name}_{args.suffix}.txt"), "w"
                 ) as fh:
-                    fh.write(formatted_plan(df))
+                    fh.write(plan_str(df, "formatted"))
             del df
             gc.collect()
 
