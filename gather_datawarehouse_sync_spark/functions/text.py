@@ -11,6 +11,9 @@ path (Q41) and as the template for genuinely Python-only logic.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -98,12 +101,15 @@ def quality_score(text: Column) -> Column:
 # identical (application, input expression, params) build can be
 # reused verbatim.  Keyed by applicationId so a fresh JVM never sees a
 # dead context's expression handles.  Bounded (r19): on a miss, entries
-# from other (dead) applications are evicted, and the memo clears
-# wholesale past a size cap — a long-lived multi-session driver can no
-# longer grow it without bound (per-exprId keys from df['col'] columns
-# were the accumulation vector).
-_COLUMN_MEMO: dict = {}
+# from other (dead) applications are evicted, and past a size cap the
+# least-recently-used entries go — a long-lived multi-session driver can
+# no longer grow it without bound (per-exprId keys from df['col']
+# columns were the accumulation vector), and a churn of one-off keys
+# cannot flush the hot builds.
+_COLUMN_MEMO: OrderedDict = OrderedDict()
 _COLUMN_MEMO_MAX = 512
+# process-wide: any driver thread may build a memoized column
+_COLUMN_MEMO_LOCK = threading.Lock()
 
 
 def _memo_column(fn_name: str, text: Column, params: tuple, build):
@@ -114,13 +120,18 @@ def _memo_column(fn_name: str, text: Column, params: tuple, build):
         key = (sc.applicationId, fn_name, text._jc.toString(), params)
     except Exception:
         return build()
-    hit = _COLUMN_MEMO.get(key)
-    if hit is None:
+    with _COLUMN_MEMO_LOCK:
+        hit = _COLUMN_MEMO.get(key)
+        if hit is not None:
+            _COLUMN_MEMO.move_to_end(key)
+            return hit
+    hit = build()
+    with _COLUMN_MEMO_LOCK:
         for k in [k for k in _COLUMN_MEMO if k[0] != key[0]]:
             del _COLUMN_MEMO[k]
-        if len(_COLUMN_MEMO) >= _COLUMN_MEMO_MAX:
-            _COLUMN_MEMO.clear()
-        hit = _COLUMN_MEMO[key] = build()
+        while len(_COLUMN_MEMO) >= _COLUMN_MEMO_MAX:
+            _COLUMN_MEMO.popitem(last=False)
+        _COLUMN_MEMO[key] = hit
     return hit
 
 

@@ -7,11 +7,14 @@ and applies per-row writes as unbounded fire-and-forget promises
 
 The Spark versions fix both ends:
 
-- **source**: a driver-side paginated fetch materialized through
-  ``spark.createDataFrame`` with an explicit schema (dimension tables are
-  small — projects/categories — so a driver fetch then broadcast-sized
-  DataFrame is the right topology; a huge source would instead shard page
-  ranges across ``mapInPandas`` workers);
+- **source**: a driver-side paginated fetch handed to the JVM as one
+  Arrow table with an explicit schema.  ``createDataFrame`` turns an
+  Arrow table into a ``LocalRelation``, so every scan of the result is a
+  JVM-local ``LocalTableScan``; a Python row list would instead become a
+  ``Scan ExistingRDD`` whose every scan re-serializes the rows through a
+  Python worker.  Dimension tables are small (projects, categories), so
+  a driver fetch is the right topology; a huge source would instead
+  shard page ranges across ``mapInPandas`` workers;
 - **sink**: ``foreachPartition`` writers with *bounded* per-partition
   concurrency and idempotency keys, so retries can't double-apply and a
   slow endpoint backpressures the job instead of ballooning memory.
@@ -26,8 +29,10 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: transport: (method, path, json_body) -> parsed-json response
 Transport = Callable[[str, str, Any], Any]
@@ -92,7 +97,9 @@ def fetch_paginated(
 
     The reference receives stringly-typed ids and ``parseInt``s them at
     every use site (``:158``, ``:179``, ``:298`` …); here the coercion
-    happens once at the boundary (``id_coerce``).
+    happens once at the boundary (``id_coerce``).  The rows reach the
+    JVM as one Arrow table, so the frame is a ``LocalTableScan`` that
+    runs no Python worker however often a plan reads it.
     """
     rows: list[dict] = []
     page = 0
@@ -112,9 +119,8 @@ def fetch_paginated(
             # dataset after page 0.  Cost: one extra empty request.
             break
         page += 1
-    return spark.createDataFrame(rows, schema=schema) if rows else (
-        spark.createDataFrame([], schema=schema)
-    )
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def foreach_partition_writer(

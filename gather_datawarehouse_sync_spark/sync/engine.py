@@ -1,5 +1,5 @@
 """The sync engine — the reference's top-level capability, re-expressed
-as one lazy DataFrame DAG per sync.
+as one DataFrame plan per sync, evaluated once.
 
 ``syncFilesystem`` (``src/DataWarehouse.js:67-258``) walks rows one at a
 time through nine imperative steps; here the same semantics are a
@@ -9,6 +9,12 @@ whole sync is a handful of shuffles regardless of row count.  The action
 DataFrame is data — auditable, countable, retryable — and the sink
 applies it in bulk with bounded concurrency (the reference fires
 unbounded per-row RPCs, ``:238-244``).
+
+Like the reference, which computes one plan from one snapshot of the
+tree and then applies it, the action DataFrame is a *snapshot*: the
+plan is evaluated once and its rows kept, so :func:`sync_report` and
+:func:`apply_file_actions` see the same rows even if the tree changes
+in between (see :func:`plan_filesystem_sync`).
 
 Action vocabulary (SURVEY §2.11):
 
@@ -74,6 +80,18 @@ def plan_filesystem_sync(
     Mirrors ``syncFilesystem``'s nine steps (SURVEY §3.2) with the
     documented deterministic deviations: canonical duplicate = min path;
     greedy claims replaced by min-project-id picks.
+
+    The result is a snapshot, not a lazy query over the live tree: it
+    is a lazy local checkpoint, so its shuffle stages run inside this
+    call (AQE plans the final stage by executing them) and the first
+    action stores the action rows in the executors' block managers.
+    Every later read (:func:`sync_report`, :func:`apply_file_actions`)
+    scans those blocks instead of re-listing and re-hashing the files.
+    The lineage is cut on purpose: rebuilding a lost block from a tree
+    that changed since the report would apply a plan the report never
+    showed.  The blocks live as long as the returned DataFrame: once the
+    caller drops it and the JVM collects it, Spark's ContextCleaner
+    frees them.
     """
     all_projects = _flatten_projects(
         projects if archived_projects is None else projects.unionByName(archived_projects)
@@ -246,10 +264,12 @@ def plan_filesystem_sync(
         "p_file",
         "p_md5",
     ]
+    # snapshot cut: the plan must not be recomputed from a changed tree
     return (
         main_actions.select(*cols)
         .unionByName(orphan_actions.select(*cols))
         .unionByName(leftover.select(*cols))
+        .localCheckpoint(eager=False)
     )
 
 

@@ -77,6 +77,22 @@ def test_fetch_paginated_empty(spark):
     assert df.count() == 0 and df.schema == PROJECT_SCHEMA
 
 
+def test_fetch_paginated_is_a_local_table_scan(spark):
+    """The fetched rows reach the JVM as one Arrow table: every scan is a
+    JVM-local LocalTableScan, never a Python-worker ``Scan ExistingRDD``,
+    and the schema (non-nullable ``id`` included) is kept."""
+    pages = [[{"id": str(i), "metadata": None, "archived": False} for i in range(3)]]
+
+    def transport(method, path, body):
+        page = int(path.split("page=")[1].split("&")[0])
+        return pages[page] if page < len(pages) else []
+
+    df = fetch_paginated(spark, transport, "/projects", PROJECT_SCHEMA)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert df.schema == PROJECT_SCHEMA
+
+
 def test_foreach_partition_writer_bounded_sink(spark, tmp_path):
     log = tmp_path / "calls.jsonl"
     df = spark.createDataFrame([(i, f"f{i}") for i in range(20)], "id long, file string")
@@ -570,7 +586,7 @@ def test_metadata_caches_bounded_and_invalidated(spark, tmp_path):
 
     app = spark.sparkContext.applicationId
 
-    # column memo: a miss clears past the size cap instead of growing
+    # column memo: a miss evicts past the size cap instead of growing
     TX._COLUMN_MEMO.clear()
     for i in range(TX._COLUMN_MEMO_MAX + 5):
         TX._COLUMN_MEMO[(app, "fake", f"expr{i}", ())] = object()
@@ -605,3 +621,30 @@ def test_metadata_caches_bounded_and_invalidated(spark, tmp_path):
     f.write_bytes(b"not really parquet")
     assert _dir_fingerprint(str(f)) is None
     assert _dir_fingerprint(str(tmp_path)) is not None
+
+
+def test_column_memo_evicts_least_recently_used(spark, monkeypatch):
+    """At its cap the column memo drops the least-recently-used build,
+    so a hot key survives a churn of one-off keys (a wholesale clear at
+    the cap would rebuild it after every clear)."""
+    from pyspark.sql import functions as F
+
+    from gather_datawarehouse_sync_spark.functions import text as TX
+
+    monkeypatch.setattr(TX, "_COLUMN_MEMO", type(TX._COLUMN_MEMO)())
+    monkeypatch.setattr(TX, "_COLUMN_MEMO_MAX", 4)
+    builds: list[str] = []
+
+    def memo(key: str):
+        def build():
+            builds.append(key)
+            return key
+
+        return TX._memo_column("probe", F.lit(key), (), build)
+
+    memo("hot")
+    for i in range(20):
+        memo(f"cold{i}")
+        memo("hot")
+    assert builds.count("hot") == 1
+    assert len(TX._COLUMN_MEMO) == 4

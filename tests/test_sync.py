@@ -5,11 +5,14 @@ in-memory project tables and a fake REST transport.
 
 from __future__ import annotations
 
+import hashlib
 import json
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from gather_datawarehouse_sync_spark.sources.filescan import scan_files
 from gather_datawarehouse_sync_spark.sources.rest import PROJECT_SCHEMA
 from gather_datawarehouse_sync_spark.sync import (
     apply_file_actions,
@@ -37,6 +40,34 @@ def _projects(spark, rows):
         for pid, f, m in rows
     ]
     return spark.createDataFrame(data, PROJECT_SCHEMA)
+
+
+def _recorder(log_path):
+    """A transport factory that appends each request to ``log_path``
+    (the transports run in Python workers, so the record is a file)."""
+
+    def transport_factory():
+        def transport(method, path, body):
+            with open(log_path, "a") as fh:
+                fh.write(json.dumps({"m": method, "p": path, "b": body}) + "\n")
+
+        return transport
+
+    return transport_factory
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts, read from the status
+    tracker under a job group unique to this call."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _plan(spark, files, projects):
@@ -153,20 +184,12 @@ def test_projects_without_file_metadata_ignored(spark):
 
 def test_apply_file_actions_requests(spark, tmp_path):
     log = tmp_path / "rpc.jsonl"
-    log_path = str(log)
     actions = plan_filesystem_sync(
         _files(spark, [("a/new.shp", "m9", 1, 1), ("b/same.shp", "m2", 1, 2)]),
         _projects(spark, [(10, "b/same.shp", "m2"), (30, "dead.shp", "zz")]),
     )
 
-    def transport_factory():
-        def transport(method, path, body):
-            with open(log_path, "a") as fh:
-                fh.write(json.dumps({"m": method, "p": path, "b": body}) + "\n")
-
-        return transport
-
-    apply_file_actions(actions, transport_factory)
+    apply_file_actions(actions, _recorder(str(log)))
     calls = [json.loads(l) for l in log.read_text().splitlines()]
     by_method = {}
     for c in calls:
@@ -181,6 +204,58 @@ def test_apply_file_actions_requests(spark, tmp_path):
     assert ins["b"]["attributes"] == {"title": "new", "isDataset": True}
     assert ins["b"]["metadata"]["file"] == {"file": "a/new.shp", "md5": "m9"}
     assert ("POST", "/projects/30/archive") in by_method
+
+
+def test_apply_applies_the_reported_snapshot(spark, tmp_path):
+    """The plan is a snapshot of the tree, like the reference's one plan
+    per ``syncFilesystem`` run: bytes rewritten and files added after
+    the report must not leak into the apply, which sends exactly the
+    reported actions with the md5s hashed at planning time."""
+    root = tmp_path / "tree"
+    root.mkdir()
+    content = {"same.shp": b"same-bytes", "drift.shp": b"old-bytes!", "new.shp": b"new"}
+    for name, data in content.items():
+        (root / name).write_bytes(data)
+    md5 = {name: hashlib.md5(data).hexdigest() for name, data in content.items()}
+    actions = plan_filesystem_sync(
+        scan_files(spark, str(root)),
+        _projects(
+            spark,
+            [(10, "same.shp", md5["same.shp"]), (20, "drift.shp", "stale"), (30, "gone.shp", "zz")],
+        ),
+    )
+    report = sync_report(actions)
+    assert report == {"keep": 1, "update": 1, "insert": 1, "archive": 1}
+
+    # same length, new bytes: only the md5 can tell the two trees apart
+    (root / "drift.shp").write_bytes(b"new-bytes!")
+    (root / "late.shp").write_bytes(b"late")
+    log = tmp_path / "rpc.jsonl"
+    apply_file_actions(actions, _recorder(str(log)))
+
+    calls = [json.loads(l) for l in log.read_text().splitlines()]
+    assert len(calls) == report["insert"] + report["update"] + report["archive"]
+    sent = {
+        c["b"]["metadata"]["file"]["file"]: c["b"]["metadata"]["file"]["md5"]
+        for c in calls
+        if c["b"] is not None
+    }
+    assert sent == {"drift.shp": md5["drift.shp"], "new.shp": md5["new.shp"]}
+    assert [c["p"].split("?")[0] for c in calls if c["b"] is None] == ["/projects/30/archive"]
+
+
+def test_apply_after_report_runs_one_job(spark, tmp_path):
+    """Once the report has read the plan, the apply scans the stored
+    action rows: one job, with no plan stage re-run."""
+    actions = plan_filesystem_sync(
+        _files(spark, [("a/new.shp", "m9", 1, 1), ("b/same.shp", "m2", 1, 2)]),
+        _projects(spark, [(10, "b/same.shp", "m1"), (30, "dead.shp", "zz")]),
+    )
+    sync_report(actions)
+    log = tmp_path / "rpc.jsonl"
+    jobs = _jobs_run_by(spark, lambda: apply_file_actions(actions, _recorder(str(log))))
+    assert jobs == 1
+    assert len(log.read_text().splitlines()) == 3
 
 
 def test_category_sync_three_way(spark):
