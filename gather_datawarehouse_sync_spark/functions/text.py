@@ -197,7 +197,11 @@ def repetition_bp(text: Column, n: int = 3) -> Column:
     total_grams`` (0 for docs shorter than ``n`` tokens).  Complements
     the top-gram share (x_top_ngram) as the second standard repetition
     quality rule; zero shuffle — one scan-side projection — and exact
-    integers, so it hash-compares against a DuckDB oracle."""
+    integers, so it hash-compares against a DuckDB oracle.
+
+    Column-returning over a text expression, so for ``n ≥ 2`` the
+    tokenizer reruns once per gram inside the :func:`word_ngrams`
+    lambda (see :func:`ngrams_from_tokens`)."""
     g = word_ngrams(text, n)
     # widen to BIGINT before the ×10000: size() is INT and a ~215k-gram
     # doc overflows int32 (ANSI crash on Spark 4 defaults)
@@ -452,7 +456,9 @@ def language_guess(text: Column, ascii_only: bool = False) -> Column:
 def fingerprint(text: Column, window: int = 8) -> Column:
     """Winnowing-style document fingerprint: xxhash64 of each word
     ``window``-gram, keep the minimum — a stable rolling-hash signature
-    used for cheap containment checks."""
+    used for cheap containment checks.  Column-returning over a text
+    expression, so the tokenizer reruns once per gram inside the slice
+    lambda (see :func:`ngrams_from_tokens`)."""
     toks = tokens(text)
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(window - 1), F.lit(1))),
@@ -499,18 +505,21 @@ def explode_sentences(df, text_col: str = "text", id_col: str = "doc_id"):
 
 def ngrams_from_tokens(toks: Column, n: int = 2) -> Column:
     """ALL word n-grams (non-distinct, in order) over an
-    ALREADY-TOKENIZED array column.
+    ALREADY-TOKENIZED array column — the form every DataFrame-level
+    site uses: project the token array first, then build grams from the
+    column.
 
-    Exists for the Generate sites (r19): the expression
-    :func:`word_ngrams` builds references its token array three times
-    (the short-doc guard, the sequence bound, the slice), and when that
-    expression is the generator of an ``explode`` the tokenizer is
-    re-evaluated per reference — ``GenerateExec`` has no subexpression
-    elimination (a ``Project`` would CSE them), so every document paid
-    3 regex splits per order (9 for the three-order diversity scan;
-    visible verbatim in the r19 before-plans).  Callers that explode
-    grams project the token array FIRST (one split per doc, pinned as
-    an attribute below the Generate) and build grams from the column.
+    The expression references its token array three times (the
+    short-doc guard, the sequence bound, and the slice inside the
+    ``transform`` lambda).  Spark evaluates a lambda body once per
+    ELEMENT with no subexpression elimination, so a tokenizer
+    expression in place of ``toks`` re-runs its regex split once per
+    gram — quadratic in the document length.  Under an ``explode``
+    the two outer references re-run it too (``GenerateExec`` has no
+    subexpression elimination at all).  Over a projected
+    attribute the tokenizer runs once per document; the projection
+    survives CollapseProject because this expression references it
+    more than once.
     """
     # guard short docs: sequence(1, 0) DESCENDS to [1, 0] and slice
     # throws on start=0 — emit an empty array instead
@@ -530,10 +539,12 @@ def word_ngrams(text: Column, n: int = 2) -> Column:
     """ALL word n-grams (non-distinct, in order) over the ascii
     tokenization the dedup/oracle surface uses (``[^a-z0-9]+`` split) —
     the multiset the repetition metrics count over.  Empty result for
-    documents shorter than ``n`` tokens.  Inside a single projection
-    the three internal token-array references CSE at codegen; for
-    explode/Generate sites use :func:`ngrams_from_tokens` over a
-    pre-projected token column instead."""
+    documents shorter than ``n`` tokens.  For ``n ≥ 2`` the tokenizer
+    sits inside the slice lambda and reruns once per gram (no
+    subexpression elimination reaches a lambda body — see
+    :func:`ngrams_from_tokens`); frame-level sites project
+    ``ascii_tokens(text)`` and call :func:`ngrams_from_tokens` over the
+    column instead."""
     return ngrams_from_tokens(ascii_tokens(text), n)
 
 
@@ -541,7 +552,9 @@ def duplicate_ngram_fraction(text: Column, n: int = 2) -> Column:
     """Gopher-style repetition signal: the fraction of word ``n``-grams
     that are repeats of an earlier occurrence (1 − distinct/total).
     High values mark boilerplate/templated text.  Pure expression —
-    exact integer ratio, so the double is bit-stable across engines."""
+    exact integer ratio, so the double is bit-stable across engines.
+    Like :func:`repetition_bp`, it is Column-returning over a text
+    expression: for ``n ≥ 2`` the tokenizer reruns once per gram."""
     grams = word_ngrams(text, n)
     total = F.size(grams)
     return F.when(

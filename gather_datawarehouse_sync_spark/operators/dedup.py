@@ -126,11 +126,19 @@ def tokens(col: Column) -> Column:
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """:func:`shingles` over an ALREADY-TOKENIZED array column — for
-    explode/Generate sites, where the tokenizer inside the composed
-    expression is re-evaluated once per reference (``GenerateExec`` has
-    no subexpression elimination; a projection below the Generate pins
-    one evaluation — see ``functions.text.ngrams_from_tokens``, r19)."""
+    """:func:`shingles` over an ALREADY-TOKENIZED array column — the
+    form every DataFrame-level site uses: project
+    ``tokens(text).alias("__toks")`` first, then shingle
+    ``F.col("__toks")``.
+
+    For ``n ≥ 2`` the token array is referenced inside the ``transform``
+    lambda, and Spark evaluates a lambda body once per ELEMENT with no
+    subexpression elimination: a tokenizer expression in place of
+    ``toks`` re-runs its regex split once per gram — quadratic in the
+    document length.  Over an attribute the lambda only slices.  The
+    token projection survives CollapseProject because this expression
+    references it more than once (the same holds below a Generate,
+    which has no subexpression elimination at all)."""
     if n <= 1:
         return F.array_distinct(toks)
     # slide an n-window over the token array with transform + slice
@@ -152,6 +160,11 @@ def shingles(col: Column, n: int = 3) -> Column:
     ``sequence(1, greatest(size-n+1, 0))`` formulation descends to
     ``[1, 0]`` there and ``slice`` throws on start 0 (latent until a
     corpus with sub-``n`` docs hits it).
+
+    Over a text expression the tokenizer sits inside the slice lambda
+    and re-runs once per gram (see :func:`shingles_from_tokens`); fine
+    for short strings and ``n = 1``, but frame-level sites project the
+    token array and call :func:`shingles_from_tokens` instead.
     """
     return shingles_from_tokens(tokens(col), n)
 
@@ -343,7 +356,14 @@ def _side_tokens(
     """(side, id, toks): the documents of both tiers, tokenized and
     tagged by join side — side 0 is the whole corpus of a self-join or
     ``new`` of a cross join, side 1 is ``reference``.  Token-less
-    documents pair with nothing and are dropped here."""
+    documents pair with nothing and are dropped here.
+
+    The tokens are projected first and the shingle set is built inside
+    a 1:1 ``explode(array(...))`` Generate (the :func:`_token_set_base`
+    barrier): filters on ``toks`` — this one, and the ``size > 0``
+    that every downstream ``explode("toks")`` infers — would otherwise
+    be pushed below the projections with the aliases substituted,
+    putting the tokenizer back inside the shingle lambda."""
     return reduce(
         DataFrame.unionByName,
         (
@@ -351,7 +371,14 @@ def _side_tokens(
             .select(
                 F.lit(side).alias("side"),
                 F.col(id_col).alias("id"),
-                shingles(F.col(text_col), ngram).alias("toks"),
+                tokens(F.col(text_col)).alias("__toks"),
+            )
+            .select(
+                "side",
+                "id",
+                F.explode(
+                    F.array(shingles_from_tokens(F.col("__toks"), ngram))
+                ).alias("toks"),
             )
             .filter(F.size("toks") > 0)
             for side, df in enumerate(frames)
@@ -424,9 +451,15 @@ def _jaccard_join(
     if 0 < len(vocab) <= bitset_vocab_limit:
         dense = len(vocab) <= 64
         if not dense:
+            # filter on the token count (same rows as n > 0): a filter
+            # on n would be pushed down with the tokenizer substituted
+            # into the shingle lambda
             avg_set = (
-                texts.select(F.size(shingles(F.col(text_col), ngram)).alias("n"))
-                .filter(F.col("n") > 0)
+                texts.select(tokens(F.col(text_col)).alias("__toks"))
+                .filter(F.size("__toks") >= max(ngram, 1))
+                .select(
+                    F.size(shingles_from_tokens(F.col("__toks"), ngram)).alias("n")
+                )
                 .limit(10_000)
                 .agg(F.avg("n"))
                 .collect()[0][0]
@@ -763,7 +796,7 @@ def minhash_signatures(
     # exchange.
     _minhash = _minhash.asNondeterministic()
 
-    sh = shingles(F.col(text_col), ngram)
+    sh = shingles_from_tokens(F.col("__toks"), ngram)
     if hash_mode == "portable":
         base = F.transform(
             sh,
@@ -776,8 +809,13 @@ def minhash_signatures(
         base = F.transform(
             sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE_PRIME))
         )
-    return spread(df).select(
-        F.col(id_col).alias("id"), _minhash(base).alias("signature")
+    # tokenize in its own projection: shingling over the token COLUMN
+    # keeps the regex split out of the slice lambda (one split per
+    # document instead of one per gram — see shingles_from_tokens)
+    return (
+        spread(df)
+        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks"))
+        .select("id", _minhash(base).alias("signature"))
     )
 
 
@@ -1471,15 +1509,25 @@ def _token_set_base(
     # + sort expression into a Filter below the projection — every doc
     # paid it twice (2× array_sort in the executed plan).  A filter on a
     # generator output cannot push below its Generate, so this shape
-    # pins ONE evaluation.
+    # pins ONE evaluation.  The tokens are projected below it so the
+    # shingle lambda slices a column instead of re-running the
+    # tokenizer per gram.
     out = (
         spread(df)
         .select(
             F.col(id_col),
             F.col(text_col),
             *( [c.alias(n) for n, c in extra.items()] if extra else [] ),
+            tokens(F.col(text_col)).alias("__toks"),
+        )
+        .select(
+            F.col(id_col),
+            F.col(text_col),
+            *( [F.col(n) for n in extra] if extra else [] ),
             F.explode(
-                F.array(F.array_sort(shingles(F.col(text_col), ngram)))
+                F.array(
+                    F.array_sort(shingles_from_tokens(F.col("__toks"), ngram))
+                )
             ).alias("__set"),
         )
         .filter(F.size("__set") > 0)

@@ -2598,22 +2598,30 @@ def _x_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`functions.text.fingerprint` variant stays available for
     compactness when cross-engine parity is not needed."""
     from gather_datawarehouse_sync_spark.functions.text import (
+        ascii_tokens,
         language_guess,
+        ngrams_from_tokens,
         quality_score_bp,
-        word_ngrams,
     )
 
     t = load_tables(spark, sf_dir, ("documents",))
     # ascii_only: the oracle's RE2 marker tokenization must be
     # byte-identical to Spark's, which the unicode default can't
     # guarantee off-ASCII (same reasoning as x_classifier_gate's
-    # ascii_tokens)
-    return t["documents"].select(
-        "doc_id",
-        language_guess(F.col("text"), ascii_only=True).alias("lang_guess"),
-        quality_score_bp(F.col("text")).alias("quality_bp"),
-        F.array_min(word_ngrams(F.col("text"), 8)).alias("fp_gram"),
-    ).orderBy("doc_id")
+    # ascii_tokens).  The 8-gram tokens are projected first: over a
+    # text expression the tokenizer would rerun once per gram inside
+    # the slice lambda.
+    return (
+        t["documents"]
+        .select("doc_id", "text", ascii_tokens(F.col("text")).alias("__toks"))
+        .select(
+            "doc_id",
+            language_guess(F.col("text"), ascii_only=True).alias("lang_guess"),
+            quality_score_bp(F.col("text")).alias("quality_bp"),
+            F.array_min(ngrams_from_tokens(F.col("__toks"), 8)).alias("fp_gram"),
+        )
+        .orderBy("doc_id")
+    )
 
 
 _df(

@@ -6298,30 +6298,44 @@ def test_minhash_portable_mode_matches_python_oracle(spark):
         minhash_signatures,
     )
 
-    rows = [(1, "the cat sat on the mat"), (2, "dogs bark"), (3, "x")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["id"]: r["signature"]
-        for r in minhash_signatures(
-            df, num_hashes=8, ngram=1, hash_mode="portable"
-        ).collect()
-    }
     coeffs = minhash_coeffs(8, 42)
 
-    def sig(text):
-        toks = sorted(
-            {t for t in __import__("re").split(r"[^a-z0-9]+", text.lower()) if t}
-        )
-        if not toks:
+    def sig(text, n):
+        words = [t for t in __import__("re").split(r"[^a-z0-9]+", text.lower()) if t]
+        # distinct space-joined n-grams; none for docs under n tokens
+        grams = {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
+        if not grams:
             return None
         hs = [
-            int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % _MERSENNE_PRIME
-            for t in toks
+            int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % _MERSENNE_PRIME
+            for g in grams
         ]
         return [min((a * h + b) % _MERSENNE_PRIME for h in hs) for a, b in coeffs]
 
-    for i, t in rows:
-        assert got[i] == sig(t), f"doc {i}"
+    cases = {
+        1: [(1, "the cat sat on the mat"), (2, "dogs bark"), (3, "x")],
+        # n ≥ 2 runs the shingle lambda: a normal doc, one under 3
+        # tokens, a punctuation-only one, and a repeated trigram
+        3: [
+            (1, "The cat sat on the mat, and the dog sat too."),
+            (2, "dogs bark"),
+            (3, "... !!! ,,,"),
+            (4, "a b c a b c a b c"),
+        ],
+    }
+    for n, rows in cases.items():
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r["id"]: r["signature"]
+            for r in minhash_signatures(
+                df, num_hashes=8, ngram=n, hash_mode="portable"
+            ).collect()
+        }
+        for i, t in rows:
+            assert got[i] == sig(t, n), f"ngram {n} doc {i}"
+    # ngram=3 ran last: the sub-3-token and punctuation-only docs
+    # have no trigram, so no signature
+    assert got[2] is None and got[3] is None
     with pytest.raises(ValueError, match="hash_mode"):
         minhash_signatures(df, hash_mode="sha9000")
 

@@ -742,6 +742,94 @@ def test_integer_dot_hot_loops_have_no_interpreted_hof(spark, sf_dir):
         assert df.count() > 0
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` in a plan string, cut at its
+    balanced closing paren (a lambda body nests arbitrarily deep, so
+    no one-line regex can delimit it)."""
+    bodies, key, i = [], "lambdafunction(", 0
+    while (i := plan.find(key, i)) >= 0:
+        depth, j = 1, i + len(key)
+        while depth and j < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[i:j])
+        i += len(key)
+    return bodies
+
+
+def _executed_plans(spark, build) -> list[str]:
+    """The final plan of every SQL execution that ``build().collect()``
+    runs, from Spark's SQL status store — the exact-Jaccard tiers
+    checkpoint their token frames, so the shingling runs in eager
+    probe and checkpoint executions that the returned frame's own plan
+    only shows as an RDD scan.  The store keeps only the newest
+    executions, in ascending id order, and is fed by the asynchronous
+    listener bus, so the bus is drained on both sides and the new
+    executions are those above the newest id seen before the call."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    before = executions()
+    mark = before[-1].executionId() if before else -1
+    build().collect()
+    return [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > mark
+    ]
+
+
+def test_shingle_lambdas_never_tokenize(spark, sf_dir):
+    """The shingle ``transform`` lambda must slice a projected token
+    column, never re-run the tokenizer: Spark evaluates a lambda body
+    once per element with no subexpression elimination, so a
+    ``split(`` inside one costs a regex split per gram — quadratic in
+    the document length.  Checked over every execution of the MinHash
+    signatures, both exact-Jaccard tiers (the default gate — bitset
+    here, after its density probe — and the prefix tier) and the
+    exact-set clusters."""
+    import random
+
+    from gather_datawarehouse_sync_spark.operators.dedup import (
+        jaccard_dedup_clusters,
+        jaccard_pairs,
+        minhash_signatures,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # 10 words → ~90 distinct 2-grams (over 64: the density probe runs)
+    # with ~30 per document (dense: the bitset tier is chosen)
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(10)]
+    small = spark.createDataFrame(
+        [(i, " ".join(rng.choices(words, k=40))) for i in range(40)],
+        "doc_id long, text string",
+    )
+    cases = {
+        "minhash": lambda: minhash_signatures(docs, hash_mode="portable"),
+        "jaccard_bitset": lambda: jaccard_pairs(small, threshold=0.5, ngram=2),
+        "jaccard_prefix": lambda: jaccard_pairs(
+            docs, threshold=0.5, ngram=3, bitset_vocab_limit=0
+        ),
+        "clusters": lambda: jaccard_dedup_clusters(docs, threshold=0.5, ngram=3),
+    }
+    tokenizing = {}
+    for name, build in cases.items():
+        plans = _executed_plans(spark, build)
+        bodies = [b for p in plans for b in _lambda_bodies(p)]
+        assert any("slice(" in b for b in bodies), name  # shingles were built
+        tokenizing[name] = sum("split(" in b for b in bodies)
+        if name == "jaccard_bitset":
+            assert any("avg(" in p for p in plans)  # the density probe ran
+            assert any("BroadcastNestedLoopJoin" in p for p in plans)
+    assert not any(tokenizing.values()), tokenizing
+
+
 def test_mmr_ivfsq_candidate_scan_prunes_to_probed_cells(spark, sf_dir, tmp_path):
     """The composed MMR serving query's candidate stage must read the
     stored code lists through the SAME DPP-pruned scan the plain IVF×SQ

@@ -615,6 +615,47 @@ def test_remove_frequent_units_properties(spark, rows, min_docs):
     assert all(r == 0 for _, r in again.values())
 
 
+_dup_docs = st.lists(
+    # (text, number of rows carrying the document)
+    st.tuples(
+        st.lists(
+            st.sampled_from(["menu", "nav", "body", ""]), min_size=0, max_size=5
+        ).map(" ".join),
+        st.integers(min_value=1, max_value=3),
+    ),
+    min_size=1,
+    max_size=6,
+)
+
+
+@given(_dup_docs, st.integers(min_value=1, max_value=4))
+@example(docs=[("menu nav", 2)], min_docs=2)  # one doc, two rows
+@_SETTINGS
+def test_frequent_units_counts_rows_precondition(spark, docs, min_docs):
+    """``frequent_units``' documented precondition is ONE row per
+    document: a unit's count is the number of ROWS containing it, so a
+    document repeated over several rows counts once per row (and can
+    push a unit over ``min_docs`` on its own).  Collapsing to one row
+    per document id first makes the count a document count."""
+    from collections import Counter
+
+    from gather_datawarehouse_sync_spark.operators.dedup import frequent_units
+
+    rows = [(i, t) for i, (t, k) in enumerate(docs) for _ in range(k)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def frequent(rs):
+        n = Counter(u for _, t in rs for u in set(t.split(" ")) if u)
+        return {u for u, c in n.items() if c >= min_docs}
+
+    def got(frame):
+        return {r["unit"] for r in frequent_units(frame, min_docs=min_docs).collect()}
+
+    assert got(df) == frequent(rows)
+    one_per_doc = [(i, t) for i, (t, _) in enumerate(docs)]
+    assert got(df.dropDuplicates(["doc_id"])) == frequent(one_per_doc)
+
+
 # ---------------------------------------------------------------------------
 # cut_duplicate_spans under ADVERSARIAL spans (r13-ADVICE item 7):
 # overlapping, nested, touching, zero-length, out-of-range — the
