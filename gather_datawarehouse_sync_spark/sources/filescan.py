@@ -10,7 +10,9 @@ reference pushed it by hand at ``:34``), content hashing as a JVM-side
 At 100 TB the same plan holds: binaryFile splits the listing across
 executors, the glob prunes before any byte is read, and the md5 is
 computed where the data lives (no driver I/O, unlike the reference's
-one-file-at-a-time ``md5File`` at ``:44``).
+one-file-at-a-time ``md5File`` at ``:44``).  As in the reference, the
+md5 is computed once per sync: :func:`scan_files` returns a snapshot
+that the file plan and the category plan both read.
 """
 
 from __future__ import annotations
@@ -112,6 +114,18 @@ def scan_files(
 
     Returns ``(file, md5, size, ino)`` with ``file`` relative to
     ``root`` (S5, ref ``:38``).
+
+    The result is a snapshot, like the reference's one ``this._files``
+    inventory: the tree is listed here, and the result is a lazy local
+    checkpoint, so the first action that evaluates it reads and hashes
+    the listed files once and stores the inventory rows in the
+    executors' block managers.
+    Every later read — the file plan, the category plan, any report —
+    scans those blocks, not the tree.  The lineage is cut on purpose:
+    rebuilding a lost block would re-hash a tree that may have changed
+    since, and mix two snapshots in one sync.  The blocks belong to the
+    returned DataFrame and live as long as it does (Spark's
+    ContextCleaner frees them once the JVM collects it).
     """
     df = (
         spark.read.format("binaryFile")
@@ -119,7 +133,8 @@ def scan_files(
         .option("recursiveFileLookup", "true")
         .load(root)
     )
-    return _inventory(df, root, suffix)
+    # lineage cut: rebuilding a lost block would re-hash a tree that may have changed
+    return _inventory(df, root, suffix).localCheckpoint(eager=False)
 
 
 def scan_files_stream(

@@ -4,8 +4,10 @@ as one DataFrame plan per sync, evaluated once.
 ``syncFilesystem`` (``src/DataWarehouse.js:67-258``) walks rows one at a
 time through nine imperative steps; here the same semantics are a
 *plan*: dedup → cascading match → orphan second-chance → action
-classification, all declarative, so Catalyst fuses the steps and the
-whole sync is a handful of shuffles regardless of row count.  The action
+classification, all declarative, so Catalyst fuses the steps.  The
+inventory is shuffled once, by the md5 duplicate window; every other
+exchange is project-sized (aggregates over the project side and the
+claims, joined back by broadcast), whatever the number of files.  The action
 DataFrame is data — auditable, countable, retryable — and the sink
 applies it in bulk with bounded concurrency (the reference fires
 unbounded per-row RPCs, ``:238-244``).
@@ -35,10 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gather_datawarehouse_sync_spark.operators.dedup import mark_duplicates
-from gather_datawarehouse_sync_spark.operators.joins import (
-    cascading_join,
-    pick_one_per_group,
-)
 from gather_datawarehouse_sync_spark.operators.hierarchy import path_categories
 from gather_datawarehouse_sync_spark.operators.reconcile import reconcile
 from gather_datawarehouse_sync_spark.sources.rest import (
@@ -86,7 +84,7 @@ def plan_filesystem_sync(
     call (AQE plans the final stage by executing them) and the first
     action stores the action rows in the executors' block managers.
     Every later read (:func:`sync_report`, :func:`apply_file_actions`)
-    scans those blocks instead of re-listing and re-hashing the files.
+    scans those blocks instead of re-running the plan.
     The lineage is cut on purpose: rebuilding a lost block from a tree
     that changed since the report would apply a plan the report never
     showed.  The blocks live as long as the returned DataFrame: once the
@@ -96,179 +94,125 @@ def plan_filesystem_sync(
     all_projects = _flatten_projects(
         projects if archived_projects is None else projects.unionByName(archived_projects)
     )
+    project = F.struct("project_id", "p_file", "p_md5")
+    # a file row, ino first: a min over its struct picks the min-ino file
+    row = ("ino", "file", "md5", "size", "alias")
 
     # D1: annotate duplicates; canonical (deterministic: min path) rows
-    # are the "mains" the match loop runs over (ref :99, :138-140)
+    # are the "mains" the match loop runs over (ref :99, :138-140).  The
+    # md5 window is the plan's one inventory-sized shuffle: every later
+    # step aggregates down to the project side and joins back by
+    # broadcast.  Each branch below re-reads that shuffle (exchange
+    # reuse), which holds only while the optimizer sees the same
+    # inventory subtree in every branch: branches keep the whole file
+    # row, and no join lets it infer an IS NOT NULL filter that it would
+    # push below the window (tests/test_plans.py pins this).
     marked = mark_duplicates(files, hash_col="md5", id_col="ino", order_col="file")
     mains = marked.filter(F.col("alias").isNull())
     aliases = marked.filter(F.col("alias").isNotNull())
 
     # J1 cascade: exact path first, md5 only as fallback (ref :538-572);
-    # then a deterministic ≤1-project-per-file pick replacing the
-    # reference's first-in-array-order [0]
-    matched = cascading_join(
-        mains,
-        all_projects,
-        tiers=[
-            (EXACT_MATCH, lambda l, r: l["file"] == r["p_file"]),
-            (MD5_MATCH, lambda l, r: l["md5"] == r["p_md5"]),
-        ],
-        match_col="match",
-        no_match_label="none",
+    # each tier picks its min project id, replacing the reference's
+    # first-in-array-order [0], so a main joins at most one row per tier
+    def tier_pick(key: str, on: str, label: str) -> DataFrame:
+        return F.broadcast(
+            all_projects.groupBy(F.col(key).alias(on)).agg(F.min(project).alias(label))
+        )
+
+    matched = (
+        mains.join(tier_pick("p_file", "file", "__exact"), "file", "left")
+        .join(tier_pick("p_md5", "md5", "__by_md5"), "md5", "left")
+        .select(
+            F.coalesce("__exact", "__by_md5").alias("__p"),
+            F.col("__exact").isNull().alias("__md5_tier"),
+            *row,
+        )
+        # the filter the claim joins below would infer, stated once
+        .filter(F.col("__p.project_id").isNotNull())
     )
-    matched = pick_one_per_group(matched, ["ino"], ["project_id"])
 
     # a project may match several mains (same path can't repeat, but its
-    # md5 might): keep ONE claim per project — exactMatch claims beat
-    # md5Match claims (r16 review find: an ino-only pick let a
-    # smaller-ino md5Match steal the project from its path-exact main,
-    # which then re-inserted as a path-duplicate project; tier priority
-    # preserves the cascade's exact-path-first intent), ties to min ino
-    claim_ranked = pick_one_per_group(
-        matched.filter(F.col("project_id").isNotNull()),
-        ["project_id"],
-        [(F.col("match") != EXACT_MATCH).cast("int"), F.col("ino")],
-    ).select(F.col("ino").alias("__claimed_ino"))
-    matched = matched.join(
-        claim_ranked, matched.ino == claim_ranked.__claimed_ino, "left"
-    ).withColumn(
-        "match",
-        F.when(
-            F.col("project_id").isNotNull() & F.col("__claimed_ino").isNull(),
-            F.lit("none"),
-        ).otherwise(F.col("match")),
-    )
-    # demotion nulls the WHOLE project tuple, not just the id: a
-    # claim-stolen main keeps its insert action either way (match ==
-    # "none" wins the classification), but stale p_file/p_md5 on its
-    # row would leak the stolen project's identity into the auditable
-    # action table, inconsistent with every other insert row (all NULL)
-    demoted = F.col("match") == "none"
-    matched = (
-        matched.withColumn(
-            "project_id", F.when(demoted, F.lit(None)).otherwise(F.col("project_id"))
-        )
-        .withColumn(
-            "p_file", F.when(demoted, F.lit(None)).otherwise(F.col("p_file"))
-        )
-        .withColumn(
-            "p_md5", F.when(demoted, F.lit(None)).otherwise(F.col("p_md5"))
-        )
-        .drop("__claimed_ino")
-    )
-
-    # M1 diff: matched mains → update when path or md5 drifted (ref
-    # :260-291 — and unlike the reference we persist the new md5), else keep
-    main_actions = matched.withColumn(
-        "action",
-        F.when(F.col("match") == "none", F.lit("insert"))  # J4 (ref :162-165)
-        .when(
-            ~F.col("p_file").eqNullSafe(F.col("file"))
-            | ~F.col("p_md5").eqNullSafe(F.col("md5")),
-            F.lit("update"),
-        )
-        .otherwise(F.lit("keep")),
-    )
+    # md5 might): ONE claim per project, carrying its main's row —
+    # exactMatch claims beat md5Match claims (r16 review find: an
+    # ino-only pick let a smaller-ino md5Match steal the project from its
+    # path-exact main, which then re-inserted as a path-duplicate
+    # project; tier priority preserves the cascade's exact-path-first
+    # intent), ties to min ino
+    claims = matched.groupBy("__p").agg(F.min(F.struct("__md5_tier", *row)).alias("__f"))
 
     # J5 orphan pass (ref :178-203): projects no main claimed get a
     # second chance against the *alias* files (md5 only — the alias set
-    # shares content with its canonical, the path tier can't apply)
-    processed = main_actions.filter(F.col("project_id").isNotNull()).select(
-        F.col("project_id").alias("__pid")
-    )
-    orphans = all_projects.join(
-        processed, all_projects.project_id == processed.__pid, "left_anti"
-    )
-    alias_match = pick_one_per_group(
-        orphans.join(
-            aliases.select(
-                F.col("file").alias("a_file"),
-                F.col("md5").alias("a_md5"),
-                F.col("size").alias("a_size"),
-                F.col("ino").alias("a_ino"),
-                F.col("alias").alias("a_alias"),
-            ),
-            F.col("p_md5") == F.col("a_md5"),
-            "left",
-        ),
-        ["project_id"],
-        ["a_ino"],
-    )
-    # one alias file can satisfy only one orphan (greedy→deterministic:
-    # min project_id wins the alias); losers fall through to archive
-    winners = pick_one_per_group(
-        alias_match.filter(F.col("a_ino").isNotNull()),
-        ["a_ino"],
-        ["project_id"],
-    )
-    losers = orphans.join(
-        winners.select(F.col("project_id").alias("__wpid")),
-        orphans.project_id == F.col("__wpid"),
-        "left_anti",
-    )
-
-    orphan_actions = winners.select(
-        F.lit("update").alias("action"),
-        F.lit(MD5_MATCH).alias("match"),
-        F.col("a_file").alias("file"),
-        F.col("a_md5").alias("md5"),
-        F.col("a_size").alias("size"),
-        F.col("a_ino").alias("ino"),
-        F.col("a_alias").alias("alias"),
-        "project_id",
-        "p_file",
-        "p_md5",
-    ).unionByName(
-        losers.select(
-            F.lit("archive").alias("action"),
-            F.lit("none").alias("match"),
-            F.lit(None).cast("string").alias("file"),
-            F.lit(None).cast("string").alias("md5"),
-            F.lit(None).cast("long").alias("size"),
-            F.lit(None).cast("long").alias("ino"),
-            F.lit(None).cast("long").alias("alias"),
-            "project_id",
-            "p_file",
-            "p_md5",
+    # shares content with its canonical, the path tier can't apply): the
+    # min-ino alias of their md5, a per-md5 min over the window's own
+    # partitioning.  One alias file can satisfy only one orphan
+    # (greedy→deterministic: min project_id wins the alias); losers fall
+    # through to archive.  The orphan test reads the whole claim (an
+    # id-only anti-join would prune the claim to a narrower inventory
+    # subtree), and the alias join is null-safe on a non-null p_md5
+    # (``==`` would infer ``md5 IS NOT NULL`` under the window).
+    orphans = (
+        all_projects.join(
+            F.broadcast(claims), F.col("project_id") == F.col("__p.project_id"), "left"
         )
+        .filter(F.col("__f").isNull())
+        .select("project_id", "p_file", "p_md5")
+    )
+    first_alias = aliases.groupBy("md5").agg(F.min(F.struct(*row)).alias("__f"))
+    winners = (
+        F.broadcast(orphans.filter(F.col("p_md5").isNotNull()))
+        .join(first_alias, F.col("p_md5").eqNullSafe(F.col("md5")))
+        .groupBy("__f")
+        .agg(F.min(project).alias("__p"))
     )
 
-    # step 8 (ref :211-221): aliases no orphan claimed become new projects
-    claimed_aliases = orphan_actions.filter(F.col("ino").isNotNull()).select(
-        F.col("ino").alias("__aino")
+    file_cols = [F.col(f"__f.{c}").alias(c) for c in row]
+    # M1 diff: claimed mains → update when path or md5 drifted (ref
+    # :260-291 — and unlike the reference we persist the new md5), else keep
+    claimed = claims.select(
+        F.when(
+            ~F.col("__p.p_file").eqNullSafe(F.col("__f.file"))
+            | ~F.col("__p.p_md5").eqNullSafe(F.col("__f.md5")),
+            F.lit("update"),
+        )
+        .otherwise(F.lit("keep"))
+        .alias("action"),
+        F.when(F.col("__f.__md5_tier"), F.lit(MD5_MATCH))
+        .otherwise(F.lit(EXACT_MATCH))
+        .alias("match"),
+        *file_cols,
+        "__p.*",
     )
-    leftover = aliases.join(
-        claimed_aliases, aliases.ino == claimed_aliases.__aino, "left_anti"
+    second_chance = winners.select(
+        F.lit("update").alias("action"), F.lit(MD5_MATCH).alias("match"), *file_cols, "__p.*"
+    )
+    # archive (ref :198-201): the orphans no alias saved
+    archived = orphans.join(
+        F.broadcast(winners), F.col("project_id") == F.col("__p.project_id"), "left_anti"
     ).select(
-        F.lit("insert").alias("action"),
+        F.lit("archive").alias("action"),
         F.lit("none").alias("match"),
-        "file",
-        "md5",
-        "size",
-        "ino",
-        "alias",
-        F.lit(None).cast("long").alias("project_id"),
-        F.lit(None).cast("string").alias("p_file"),
-        F.lit(None).cast("string").alias("p_md5"),
-    )
-
-    cols = [
-        "action",
-        "match",
-        "file",
-        "md5",
-        "size",
-        "ino",
-        "alias",
         "project_id",
         "p_file",
         "p_md5",
-    ]
+    )
+    # insert: mains no project claimed (J4, ref :162-165 — a main whose
+    # claim was taken carries no project residue) and aliases no orphan
+    # claimed (step 8, ref :211-221)
+    inserted = (
+        marked.join(F.broadcast(claims), F.col("ino") == F.col("__f.ino"), "left_anti")
+        .join(F.broadcast(winners), F.col("ino") == F.col("__f.ino"), "left_anti")
+        .select(F.lit("insert").alias("action"), F.lit("none").alias("match"), *row)
+    )
+
     # snapshot cut: the plan must not be recomputed from a changed tree
     return (
-        main_actions.select(*cols)
-        .unionByName(orphan_actions.select(*cols))
-        .unionByName(leftover.select(*cols))
+        claimed.unionByName(second_chance)
+        .unionByName(archived, allowMissingColumns=True)
+        .unionByName(inserted, allowMissingColumns=True)
+        .select(
+            "action", "match", "file", "md5", "size", "ino", "alias",
+            "project_id", "p_file", "p_md5",
+        )
         .localCheckpoint(eager=False)
     )
 

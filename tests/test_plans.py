@@ -8,6 +8,8 @@ is a performance bug even while every oracle test stays green.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -757,9 +759,9 @@ def _lambda_bodies(plan: str) -> list[str]:
     return bodies
 
 
-def _executed_plans(spark, build) -> list[str]:
-    """The final plan of every SQL execution that ``build().collect()``
-    runs, from Spark's SQL status store — the exact-Jaccard tiers
+def _executed_plans(spark, run) -> list[str]:
+    """The final plan of every SQL execution that ``run()`` starts,
+    from Spark's SQL status store — the exact-Jaccard tiers
     checkpoint their token frames, so the shingling runs in eager
     probe and checkpoint executions that the returned frame's own plan
     only shows as an RDD scan.  The store keeps only the newest
@@ -776,7 +778,7 @@ def _executed_plans(spark, build) -> list[str]:
 
     before = executions()
     mark = before[-1].executionId() if before else -1
-    build().collect()
+    run()
     return [
         e.physicalPlanDescription()
         for e in executions()
@@ -820,7 +822,7 @@ def test_shingle_lambdas_never_tokenize(spark, sf_dir):
     }
     tokenizing = {}
     for name, build in cases.items():
-        plans = _executed_plans(spark, build)
+        plans = _executed_plans(spark, lambda: build().collect())
         bodies = [b for p in plans for b in _lambda_bodies(p)]
         assert any("slice(" in b for b in bodies), name  # shingles were built
         tokenizing[name] = sum("split(" in b for b in bodies)
@@ -828,6 +830,81 @@ def test_shingle_lambdas_never_tokenize(spark, sf_dir):
             assert any("avg(" in p for p in plans)  # the density probe ran
             assert any("BroadcastNestedLoopJoin" in p for p in plans)
     assert not any(tokenizing.values()), tokenizing
+
+
+def _final_nodes(plan: str) -> list[str]:
+    """The operator details of one formatted executed plan — for an
+    adaptive plan, only the operators of its final plan — each without
+    its ``(n)`` number."""
+    tree, _, details = plan.partition("\n\n\n")
+    ids = set(re.findall(r"\((\d+)\)", tree.split("== Initial Plan ==")[0]))
+    parts = re.split(r"\n\((\d+)\) ", "\n" + details)
+    return [body for n, body in zip(parts[1::2], parts[2::2]) if n in ids]
+
+
+def test_sync_reads_and_hashes_the_tree_once(spark, tmp_path):
+    """One sync — the file plan, the category plan and both reports, as
+    the reference runs ``syncFilesystem`` and ``syncCategories`` over
+    one inventory — lists and hashes the tree in ONE ``binaryFile``
+    scan, and shuffles the inventory once, for the md5 duplicate
+    window: every other exchange carries project-side aggregates, and
+    every branch that needs the window re-reads that one shuffle.
+    Checked over every SQL execution of the sync (the scan runs in the
+    inventory's own checkpoint execution).  The tree gives each branch
+    of the plan rows (exact and md5 claims, an alias saved by an
+    orphan, an archive, a main and an alias inserted), so adaptive
+    execution prunes none of them."""
+    import hashlib
+
+    from gather_datawarehouse_sync_spark.sources.filescan import scan_files
+    from gather_datawarehouse_sync_spark.sources.rest import (
+        CATEGORY_SCHEMA,
+        PROJECT_SCHEMA,
+    )
+    from gather_datawarehouse_sync_spark.sync import (
+        plan_category_sync,
+        plan_filesystem_sync,
+        sync_report,
+    )
+
+    tree = {
+        "a/keep.shp": b"kept", "a/moved.shp": b"moved", "b/dup.shp": b"kept",
+        "c/copy.shp": b"new", "c/new.shp": b"new",
+    }
+    for name, data in tree.items():
+        (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / name).write_bytes(data)
+    md5 = {name: hashlib.md5(data).hexdigest() for name, data in tree.items()}
+    projects = spark.createDataFrame(
+        [
+            {"id": i, "metadata": {"iam": "gatherbot", "file": {"file": f, "md5": m}}}
+            for i, f, m in [
+                (1, "a/keep.shp", md5["a/keep.shp"]),
+                (2, "old/moved.shp", md5["a/moved.shp"]),
+                (3, "gone/dup.shp", md5["b/dup.shp"]),
+                (4, "gone.shp", "zz"),
+            ]
+        ],
+        PROJECT_SCHEMA,
+    )
+    server = spark.createDataFrame([], CATEGORY_SCHEMA)
+    reports = []
+
+    def sync():
+        files = scan_files(spark, str(tmp_path))
+        reports.append(sync_report(plan_filesystem_sync(files, projects)))
+        reports.append(sync_report(plan_category_sync(files, server)))
+
+    nodes = [n for p in _executed_plans(spark, sync) for n in _final_nodes(p)]
+    assert reports == [{"keep": 1, "update": 2, "archive": 1, "insert": 2}, {"insert": 3}]
+    assert sum(n.startswith("Scan binaryFile") for n in nodes) == 1
+    windows = {re.sub(r"#\d+", "", n) for n in nodes if n.startswith("Window")}
+    assert len(windows) == 1 and ", [md5], [file ASC" in windows.pop()
+    inventory_shuffles = [
+        n for n in nodes if n.startswith("Exchange") and "ino#" in n.splitlines()[1]
+    ]
+    assert len(inventory_shuffles) == 1
+    assert "hashpartitioning(md5#" in inventory_shuffles[0]
 
 
 def test_mmr_ivfsq_candidate_scan_prunes_to_probed_cells(spark, sf_dir, tmp_path):

@@ -783,6 +783,161 @@ def test_scan_files_exotic_suffixes(spark, tmp_path):
     assert got(".s[p") == {"g.s[p", "h.S[P"}
 
 
+# ---------------------------------------------------------------------------
+# Filesystem sync: the plan against a row-at-a-time model of its steps
+# ---------------------------------------------------------------------------
+
+_SYNC_PATHS = ["a/x.shp", "a/y.shp", "b/x.shp", "z.shp"]
+_SYNC_MD5S = ["m1", "m2", "m3"]
+
+# (file, md5, size, ino): paths and md5s from small pools, so files share
+# md5 groups and paths; inos are unique, as in a real inventory
+_sync_files = st.lists(
+    st.tuples(
+        st.sampled_from(_SYNC_PATHS), st.sampled_from(_SYNC_MD5S), st.integers(0, 9)
+    ),
+    max_size=8,
+).flatmap(
+    lambda rows: st.lists(
+        st.integers(-99, 99), min_size=len(rows), max_size=len(rows), unique=True
+    ).map(lambda inos: [(f, m, s, i) for (f, m, s), i in zip(rows, inos)])
+)
+
+# (id, p_file, p_md5, archived): p_file None = no metadata.file; paths and
+# md5s collide with the files' and with each other; ids unique, as REST
+# returns them
+_sync_projects = st.lists(
+    st.tuples(
+        st.sampled_from(_SYNC_PATHS + ["gone.shp", None]),
+        st.sampled_from(_SYNC_MD5S + ["m9"]),
+        st.booleans(),
+    ),
+    max_size=7,
+).flatmap(
+    lambda rows: st.lists(
+        st.integers(1, 99), min_size=len(rows), max_size=len(rows), unique=True
+    ).map(lambda ids: [(i, f, m, a) for (f, m, a), i in zip(rows, ids)])
+)
+
+
+def _sync_model(files, projects):
+    """``plan_filesystem_sync``'s rows, one file and one project at a
+    time: canonical duplicate = min path (then ino); exact path tier,
+    then md5 tier, min project id within a tier; one claim per project,
+    exactMatch before md5Match, then min ino; an orphan takes its md5's
+    min-ino alias, and min project id wins a contested alias; unclaimed
+    aliases insert."""
+    P = sorted((i, f, m) for i, f, m, _ in projects if f is not None)
+    canon = {}
+    for f, m, _, i in sorted(files, key=lambda r: (r[0], r[3])):
+        canon.setdefault(m, i)
+    mains = [r for r in files if canon[r[1]] == r[3]]
+    aliases = sorted((r[3], r) for r in files if canon[r[1]] != r[3])
+
+    def pick(f, m):
+        for match, hits in (
+            ("exactMatch", [p for p in P if p[1] == f]),
+            ("md5Match", [p for p in P if p[2] == m]),
+        ):
+            if hits:
+                return match, hits[0]
+        return "none", None
+
+    picks = {r[3]: pick(r[0], r[1]) for r in mains}
+    claim = {}
+    for ino, (match, p) in sorted(picks.items(), key=lambda kv: (kv[1][0] != "exactMatch", kv[0])):
+        if p is not None:
+            claim.setdefault(p[0], ino)
+    rows = []
+    for f, m, s, i in mains:
+        match, p = picks[i]
+        if p is None or claim[p[0]] != i:
+            rows.append(("insert", "none", f, m, s, i, None, None, None, None))
+        else:
+            action = "keep" if (p[1], p[2]) == (f, m) else "update"
+            rows.append((action, match, f, m, s, i, None, *p))
+    won = {}
+    for p in P:
+        if p[0] in claim:
+            continue
+        first = next((r for _, r in aliases if r[1] == p[2]), None)
+        if first is not None and first[3] not in won:
+            won[first[3]] = p
+        else:
+            rows.append(("archive", "none", None, None, None, None, None, *p))
+    for i, (f, m, s, _) in aliases:
+        if i in won:
+            rows.append(("update", "md5Match", f, m, s, i, canon[m], *won[i]))
+        else:
+            rows.append(("insert", "none", f, m, s, i, canon[m], None, None, None))
+    return rows
+
+
+def _sync_universes(universes):
+    """Several independent inputs as one: each universe gets its own
+    path prefix, md5s and ino / id ranges (order kept within it), so one
+    Spark plan checks several examples."""
+    files, projects = [], []
+    for k, (fs, ps) in enumerate(universes):
+        files += [(f"u{k}/{f}", f"u{k}:{m}", s, 1000 * k + i) for f, m, s, i in fs]
+        projects += [
+            (1000 * k + i, None if f is None else f"u{k}/{f}", f"u{k}:{m}", a)
+            for i, f, m, a in ps
+        ]
+    return files, projects
+
+
+@given(st.lists(st.tuples(_sync_files, _sync_projects), min_size=1, max_size=4))
+@example(  # r16: a smaller-ino md5Match must not steal a path-exact claim
+    universes=[([("a/x.shp", "m1", 1, 50), ("b/x.shp", "m2", 1, 10)], [(7, "a/x.shp", "m2", False)])],
+)
+@example(  # two orphans contest one alias: min id wins, the other archives;
+    # a third orphan's alias sits at its own path and md5, still an update
+    universes=[
+        (
+            [("a/x.shp", "m1", 1, 1), ("b/x.shp", "m1", 1, 2)],
+            [(5, "a/x.shp", "m1", False), (9, "z.shp", "m1", True), (3, "gone.shp", "m1", False)],
+        ),
+        (
+            [("a/x.shp", "m1", 1, 1), ("a/x.shp", "m1", 1, 2)],
+            [(1, "a/x.shp", "m1", False), (2, "a/x.shp", "m1", False)],
+        ),
+    ],
+)
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_filesystem_sync_matches_row_model(spark, universes):
+    """For ANY inventory and project set, ``plan_filesystem_sync`` emits
+    exactly the model's rows: the row-identity guard for the plan's
+    shape (aggregate picks and claims instead of per-row windows)."""
+    from collections import Counter
+
+    from gather_datawarehouse_sync_spark.sources.rest import PROJECT_SCHEMA
+    from gather_datawarehouse_sync_spark.sync import plan_filesystem_sync
+
+    files, projects = _sync_universes(universes)
+
+    def frame(archived):
+        return spark.createDataFrame(
+            [
+                {
+                    "id": i,
+                    "metadata": {
+                        "iam": "gatherbot",
+                        "file": None if f is None else {"file": f, "md5": m},
+                    },
+                    "archived": a,
+                }
+                for i, f, m, a in projects
+                if a == archived
+            ],
+            PROJECT_SCHEMA,
+        )
+
+    inventory = spark.createDataFrame(files, "file string, md5 string, size long, ino long")
+    got = plan_filesystem_sync(inventory, frame(False), frame(True)).collect()
+    assert Counter(map(tuple, got)) == Counter(_sync_model(files, projects))
+
+
 _split_edges = st.lists(
     st.tuples(st.integers(0, 30), st.integers(0, 30)).filter(
         lambda t: t[0] != t[1]

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gather_datawarehouse_sync_spark.sources.filescan import scan_files
-from gather_datawarehouse_sync_spark.sources.rest import PROJECT_SCHEMA
+from gather_datawarehouse_sync_spark.sources.rest import CATEGORY_SCHEMA, PROJECT_SCHEMA
 from gather_datawarehouse_sync_spark.sync import (
     apply_file_actions,
     plan_category_sync,
@@ -256,6 +256,27 @@ def test_apply_after_report_runs_one_job(spark, tmp_path):
     jobs = _jobs_run_by(spark, lambda: apply_file_actions(actions, _recorder(str(log))))
     assert jobs == 1
     assert len(log.read_text().splitlines()) == 3
+
+
+def test_category_plan_reads_the_file_plans_snapshot(spark, tmp_path):
+    """The file plan and the category plan read one snapshot of the
+    tree, as the reference runs both syncs over one inventory: files
+    added to a new directory, or moved there, after the file plan was
+    reported must not reach the category plan built from the same
+    ``files`` frame (a re-read of the tree would also fail on the
+    moved file's old path)."""
+    root = tmp_path / "tree"
+    (root / "A").mkdir(parents=True)
+    (root / "A" / "x.shp").write_bytes(b"x")
+    files = scan_files(spark, str(root))
+    assert sync_report(plan_filesystem_sync(files, _projects(spark, []))) == {"insert": 1}
+
+    (root / "NEW").mkdir()
+    (root / "NEW" / "y.shp").write_bytes(b"y")
+    (root / "A" / "x.shp").rename(root / "NEW" / "x.shp")
+    server = spark.createDataFrame([], CATEGORY_SCHEMA)
+    assert sync_report(plan_category_sync(files, server)) == {"insert": 1}
+    assert [r["name"] for r in plan_category_sync(files, server).collect()] == ["files/A"]
 
 
 def test_category_sync_three_way(spark):
