@@ -40,6 +40,13 @@ def path_categories(
     inserts.  (Deliberate deviation from a byte-faithful JS ``split``:
     the reference only ever sees relative paths because S5 strips the
     scan root first.)
+
+    Rows are deduplicated on ``(type, name)``, the category key.
+    ``name`` fixes ``parent``, ``short_name`` and ``depth``, so the
+    rows are those of a distinct over all columns; but the aggregate's
+    output is partitioned by the key, so a join on ``(type, name)``
+    (:func:`~gather_datawarehouse_sync_spark.sync.plan_category_sync`'s
+    reconcile) reuses it and shuffles only the other side.
     """
     parts = F.expr(
         f"filter(slice(split({path_col}, '/'), 1, "
@@ -62,11 +69,11 @@ def path_categories(
         .alias("parent"),
         F.col("__part").alias("short_name"),
         (F.col("__pos") + 1).alias("depth"),
-    ).distinct()
+    )
     return prefixes.select(
         F.lower("parent").alias("type"),
         "name",
         "short_name",
         F.concat(F.col("parent"), F.lit("/")).alias("path"),
         "depth",
-    )
+    ).dropDuplicates(["type", "name"])

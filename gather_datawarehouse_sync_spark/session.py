@@ -50,6 +50,10 @@ def get_spark(app_name: str = "gather_datawarehouse_sync_spark") -> SparkSession
         # rejects; read as long and convert in load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # the generated-class cache is JVM-wide and static; at its default
+        # of 100 entries one sync (~90 distinct classes) cycles the LRU,
+        # so every later sync in the session would recompile all of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if SparkSession.getActiveSession() is None:

@@ -10,9 +10,11 @@ reference pushed it by hand at ``:34``), content hashing as a JVM-side
 At 100 TB the same plan holds: binaryFile splits the listing across
 executors, the glob prunes before any byte is read, and the md5 is
 computed where the data lives (no driver I/O, unlike the reference's
-one-file-at-a-time ``md5File`` at ``:44``).  As in the reference, the
-md5 is computed once per sync: :func:`scan_files` returns a snapshot
-that the file plan and the category plan both read.
+one-file-at-a-time ``md5File`` at ``:44``).  :func:`scan_files` merges
+the splits into one task per core; its docstring gives what that costs
+on trees of large files and under dynamic allocation.  As in the
+reference, the md5 is computed once per sync: :func:`scan_files`
+returns a snapshot that the file plan and the category plan both read.
 """
 
 from __future__ import annotations
@@ -126,6 +128,24 @@ def scan_files(
     since, and mix two snapshots in one sync.  The blocks belong to the
     returned DataFrame and live as long as it does (Spark's
     ContextCleaner frees them once the JVM collects it).
+
+    The snapshot has at most one partition per core
+    (``defaultParallelism``).  ``binaryFile`` packs about 32 files into
+    a split, because each file counts as 4 MB of open cost however
+    small it is, so a 2,000-file tree of shapefile stubs lists as 63
+    tasks, and every read of the snapshot would run 63 tasks too.  A
+    coalesce merges splits without a shuffle, so the scan, the hash and
+    every later read run one task per core.  Two limits follow, since
+    the coalesce sits under the hash:
+
+    - it merges neighbouring splits by count, not by bytes, and
+      ``binaryFile`` packs the largest files first, so the largest files
+      of a tree are hashed by one task (a tree of six 64 MB files and
+      600 small ones put all 384 MB into one of four tasks);
+    - ``defaultParallelism`` is read when this is called.  On a cluster
+      it counts the cores registered then; under dynamic allocation that
+      can be 2, and the whole tree is then hashed by two tasks, however
+      many executors join later.
     """
     df = (
         spark.read.format("binaryFile")
@@ -134,7 +154,11 @@ def scan_files(
         .load(root)
     )
     # lineage cut: rebuilding a lost block would re-hash a tree that may have changed
-    return _inventory(df, root, suffix).localCheckpoint(eager=False)
+    return (
+        _inventory(df, root, suffix)
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=False)
+    )
 
 
 def scan_files_stream(

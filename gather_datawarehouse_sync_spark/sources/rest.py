@@ -100,6 +100,12 @@ def fetch_paginated(
     happens once at the boundary (``id_coerce``).  The rows reach the
     JVM as one Arrow table, so the frame is a ``LocalTableScan`` that
     runs no Python worker however often a plan reads it.
+
+    The frame is one partition.  It was fetched through the driver, so
+    it is driver-sized by construction, and a single partition already
+    satisfies the clustering of any aggregate over it: a plan's
+    project-side ``groupBy`` runs in one task with no ``Exchange``,
+    instead of a shuffle over one task per core.
     """
     rows: list[dict] = []
     page = 0
@@ -120,7 +126,7 @@ def fetch_paginated(
             break
         page += 1
     table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema=schema)
+    return spark.createDataFrame(table, schema=schema).coalesce(1)
 
 
 def foreach_partition_writer(

@@ -907,6 +907,110 @@ def test_sync_reads_and_hashes_the_tree_once(spark, tmp_path):
     assert "hashpartitioning(md5#" in inventory_shuffles[0]
 
 
+@pytest.mark.parametrize("archived_apart", [False, True])
+def test_sync_partitions_follow_the_data(spark, tmp_path, archived_apart):
+    """Each partition count in a sync follows the size of the data it
+    holds.  The projects come from ``fetch_paginated`` as one partition,
+    so no project-side aggregate shuffles project rows; the category
+    dedup shuffles on reconcile's join key, so the join reuses it; the
+    inventory snapshot has at most one partition per core, although the
+    200-file tree lists as more ``binaryFile`` splits than that; and the
+    sink, whose partitions follow those inputs, runs at most one task
+    per core.  Checked with the
+    archived projects given apart and folded into ``projects``.  The
+    tree gives every plan branch rows (exact and md5 claims, an alias
+    saved by an orphan, an archive, inserts)."""
+    import hashlib
+
+    from gather_datawarehouse_sync_spark.sources.filescan import scan_files
+    from gather_datawarehouse_sync_spark.sources.rest import (
+        CATEGORY_SCHEMA,
+        PROJECT_SCHEMA,
+        fetch_paginated,
+    )
+    from gather_datawarehouse_sync_spark.sync import (
+        apply_file_actions,
+        plan_category_sync,
+        plan_filesystem_sync,
+        sync_report,
+    )
+
+    for i in range(200):
+        path = tmp_path / f"d{i % 5}" / f"f{i}.shp"
+        path.parent.mkdir(exist_ok=True)
+        path.write_bytes(b"%d" % (i % 150))  # f150..f199 repeat f0..f49
+
+    def md5(i):
+        return hashlib.md5(b"%d" % i).hexdigest()
+
+    rows = [
+        {"id": i, "metadata": {"iam": "gatherbot", "file": {"file": f, "md5": m}}, "archived": a}
+        for i, f, m, a in [
+            (1, "d0/f0.shp", md5(0), False),
+            (2, "old/f1.shp", md5(1), False),
+            (3, "gone.shp", "zz", True),
+            (4, "gone/f150.shp", md5(0), False),
+        ]
+    ]
+
+    def fetch(data, schema=PROJECT_SCHEMA):
+        def transport(method, url, body):
+            return data if "page=0&" in url else []
+
+        return fetch_paginated(spark, transport, "/items", schema)
+
+    if archived_apart:
+        projects = fetch([r for r in rows if not r["archived"]])
+        archived = fetch([r for r in rows if r["archived"]])
+    else:
+        projects, archived = fetch(rows), None
+    server = fetch([], CATEGORY_SCHEMA)
+    sc = spark.sparkContext
+    seen = {}
+
+    def sync():
+        files = scan_files(spark, str(tmp_path))
+        seen["scan_partitions"] = files.rdd.getNumPartitions()
+        actions = plan_filesystem_sync(files, projects, archived)
+        seen["reports"] = [sync_report(actions), sync_report(plan_category_sync(files, server))]
+        group = f"apply-{archived_apart}"
+        sc.setJobGroup(group, group)
+        try:
+            apply_file_actions(actions, lambda: lambda method, url, body: None)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        status = sc.statusTracker()
+        seen["apply_tasks"] = sum(
+            status.getStageInfo(s).numTasks
+            for j in status.getJobIdsForGroup(group)
+            for s in status.getJobInfo(j).stageIds
+        )
+
+    nodes = [n for p in _executed_plans(spark, sync) for n in _final_nodes(p)]
+    assert seen["reports"] == [
+        {"keep": 1, "update": 2, "archive": 1, "insert": 197}, {"insert": 5}
+    ]
+    # still one read of the tree and one inventory shuffle
+    assert sum(n.startswith("Scan binaryFile") for n in nodes) == 1
+    assert sum(n.startswith("Exchange") and "ino#" in n.splitlines()[1] for n in nodes) == 1
+    project_shuffles = [
+        n
+        for n in nodes
+        if n.startswith("Exchange")
+        and re.search(r"\b(id|project_id|p_file|p_md5)#", n.splitlines()[1])
+    ]
+    assert project_shuffles == []
+    category_shuffles = [
+        n for n in nodes if n.startswith("Exchange") and "name#" in n.splitlines()[1]
+    ]
+    assert category_shuffles
+    assert all("hashpartitioning(type#" in n for n in category_shuffles)
+    assert seen["scan_partitions"] <= sc.defaultParallelism
+    assert 0 < seen["apply_tasks"] <= sc.defaultParallelism
+
+
 def test_mmr_ivfsq_candidate_scan_prunes_to_probed_cells(spark, sf_dir, tmp_path):
     """The composed MMR serving query's candidate stage must read the
     stored code lists through the SAME DPP-pruned scan the plain IVF×SQ

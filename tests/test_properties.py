@@ -887,9 +887,13 @@ def _sync_universes(universes):
     return files, projects
 
 
-@given(st.lists(st.tuples(_sync_files, _sync_projects), min_size=1, max_size=4))
+@given(
+    st.lists(st.tuples(_sync_files, _sync_projects), min_size=1, max_size=4),
+    st.booleans(),
+)
 @example(  # r16: a smaller-ino md5Match must not steal a path-exact claim
     universes=[([("a/x.shp", "m1", 1, 50), ("b/x.shp", "m2", 1, 10)], [(7, "a/x.shp", "m2", False)])],
+    one_partition=False,
 )
 @example(  # two orphans contest one alias: min id wins, the other archives;
     # a third orphan's alias sits at its own path and md5, still an update
@@ -903,12 +907,15 @@ def _sync_universes(universes):
             [(1, "a/x.shp", "m1", False), (2, "a/x.shp", "m1", False)],
         ),
     ],
+    one_partition=True,
 )
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-def test_filesystem_sync_matches_row_model(spark, universes):
+def test_filesystem_sync_matches_row_model(spark, universes, one_partition):
     """For ANY inventory and project set, ``plan_filesystem_sync`` emits
     exactly the model's rows: the row-identity guard for the plan's
-    shape (aggregate picks and claims instead of per-row windows)."""
+    shape (aggregate picks and claims instead of per-row windows).
+    ``one_partition`` hands the project frames over as one partition,
+    as ``fetch_paginated`` does, so no project-side aggregate shuffles."""
     from collections import Counter
 
     from gather_datawarehouse_sync_spark.sources.rest import PROJECT_SCHEMA
@@ -917,7 +924,7 @@ def test_filesystem_sync_matches_row_model(spark, universes):
     files, projects = _sync_universes(universes)
 
     def frame(archived):
-        return spark.createDataFrame(
+        df = spark.createDataFrame(
             [
                 {
                     "id": i,
@@ -932,6 +939,7 @@ def test_filesystem_sync_matches_row_model(spark, universes):
             ],
             PROJECT_SCHEMA,
         )
+        return df.coalesce(1) if one_partition else df
 
     inventory = spark.createDataFrame(files, "file string, md5 string, size long, ino long")
     got = plan_filesystem_sync(inventory, frame(False), frame(True)).collect()

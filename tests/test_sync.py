@@ -279,6 +279,36 @@ def test_category_plan_reads_the_file_plans_snapshot(spark, tmp_path):
     assert [r["name"] for r in plan_category_sync(files, server).collect()] == ["files/A"]
 
 
+def test_warm_sync_finds_its_generated_classes(spark, tmp_path):
+    """A watcher daemon syncs again and again in one session.  One sync
+    generates about 90 distinct classes, and Spark's JVM-wide
+    generated-class cache must hold them all: at Spark's default of 100
+    entries the LRU cycles, and every later sync recompiles every
+    class.  A second identical sync compiles (almost) nothing."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    root = tmp_path / "tree"
+    for name, data in {"a/x.shp": b"x", "a/y.shp": b"y", "b/x.shp": b"x"}.items():
+        (root / name).parent.mkdir(parents=True, exist_ok=True)
+        (root / name).write_bytes(data)
+    projects = _projects(
+        spark,
+        [(10, "a/x.shp", hashlib.md5(b"x").hexdigest()), (20, "a/old.shp", "zz"), (30, "c/z.shp", "m")],
+    )
+    server = spark.createDataFrame([], CATEGORY_SCHEMA)
+
+    def sync(i):
+        files = scan_files(spark, str(root))
+        actions = plan_filesystem_sync(files, projects)
+        sync_report(actions)
+        sync_report(plan_category_sync(files, server))
+        apply_file_actions(actions, _recorder(str(tmp_path / f"rpc{i}.jsonl")))
+
+    sync(0)
+    before = compiles.getCount()
+    sync(1)
+    assert compiles.getCount() - before <= 20
+
+
 def test_category_sync_three_way(spark):
     files = _files(
         spark,
