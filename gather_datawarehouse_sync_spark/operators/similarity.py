@@ -12,6 +12,14 @@ LLM-pipeline extension list.  Two tiers:
   candidates only within matching buckets/cells, the 100 TB path
   (bounded fan-out instead of an all-pairs cross join).
 
+Every top-k tier ends in ONE rank window (:func:`_ranked_topk`:
+``row_number`` over (score desc, neighbor_id), cut at k).  The scan
+tiers with a bounded query side — :func:`sq_topk`, :func:`pq_topk` and
+the floored-micro exact tier — share ONE broadcast-query scorer
+(:func:`_broadcast_query_topk`) and differ only in their query payload
+and score matrix; :func:`ivf_sq_topk` is the one-rung case of
+:func:`ivf_sq_topk_ladder`.
+
 Scoring hot paths (SQ codes, the floored-micro integer tier, MMR
 relevance, hybrid retrieval) run as exact int64 numpy kernels over
 Arrow batches — measured faster than both the interpreted
@@ -94,14 +102,7 @@ def brute_force_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("score", score)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _ranked_topk(scored, k)
 
 
 def _spark_type_of(df: DataFrame, col: str) -> str:
@@ -111,27 +112,111 @@ def _spark_type_of(df: DataFrame, col: str) -> str:
     return dict(df.dtypes)[col]
 
 
-# Query-side chunk for the broadcast-scoring kernels: bounds the
-# per-batch score matrix at (chunk × |batch|) int64 regardless of how
-# many queries the broadcast budget admits — at the 100k budget an
+# Query-side chunk of the broadcast-query scorer: bounds the per-batch
+# score matrix at (chunk × |batch|) regardless of how many queries the
+# broadcast budget admits — at the 100k budget an
 # unchunked (|Q| × batch) matrix alone is ~8 GB per in-flight batch.
 _QUERY_CHUNK = 1024
 
 
 def _batch_topk_rows(qids, S, valid, nid, k):
-    """Per-batch per-query top-k over a (chunk × batch) int64 score
-    matrix: stable argsort on the negated scores — the batch rows are
-    pre-sorted by neighbor id, so ties break to the smaller id without a
-    lexsort (which cannot handle object-dtype ids).  ``valid`` masks
-    self-pairs; masked cells sort last via the int64-max sentinel.
+    """Per-batch per-query top-k over a (chunk × batch) int64 or float64
+    score matrix: stable argsort on the negated scores — the batch rows
+    are pre-sorted by neighbor id, so ties break to the smaller id
+    without a lexsort (which cannot handle object-dtype ids).  ``valid``
+    masks self-pairs; masked cells sort last via a max sentinel.
     Returns (query_ids, neighbor_ids, scores) row arrays."""
     kk = min(k, S.shape[1])
-    key = np.where(valid, -S, np.iinfo(np.int64).max)
+    last = np.inf if S.dtype.kind == "f" else np.iinfo(np.int64).max
+    key = np.where(valid, -S, last)
     order = np.argsort(key, axis=1, kind="stable")[:, :kk]
     qi = np.repeat(np.arange(len(qids)), kk)
     ni = order.ravel()
     keep = valid[qi, ni]
     return qids[qi][keep], nid[ni][keep], S[qi, ni][keep]
+
+
+def _ranked_topk(scored: DataFrame, k: int, by: tuple[str, ...] = ()) -> DataFrame:
+    """The one final rank window of every top-k tier: ``row_number``
+    per query (and per ``by`` key — the ladder's ``nprobe``) over
+    (score desc, neighbor_id), cut at ``k`` — so every tier breaks
+    score ties to the minimum neighbor id, matching the Q43 oracle.
+    Returns (*by, query_id, neighbor_id, score, rank)."""
+    w = Window.partitionBy(*by, "query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*by, "query_id", "neighbor_id", "score", "rank")
+    )
+
+
+def _broadcast_query_topk(
+    tier: str,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    budget: int,
+    prepare,
+    batch_scores,
+    score_t: str = "long",
+    encode=None,
+) -> DataFrame:
+    """The one broadcast-query scorer of the scan tiers (:func:`sq_topk`,
+    :func:`pq_topk`, :func:`_floored_micro_topk`): each tier supplies
+    only its query payload and its score matrix.
+
+    Query rows with a non-NULL id and vector, projected by ``encode``
+    (default ``(id_col, vec_col)``), are collected under the ``budget``
+    guard (the :func:`brute_force_topk` small-side contract); none
+    returns an empty result typed by the input's id type.
+    ``prepare(rows)`` gives (query payload, corpus frame); the payload
+    is broadcast, and ``mapInPandas`` drops each corpus batch's NULL
+    rows (they can never win a rank), pre-sorts it by id (so
+    :func:`_batch_topk_rows` breaks ties to the smaller id) and scores
+    it per ``_QUERY_CHUNK`` of queries through ``batch_scores(payload,
+    batch)(lo, hi)``.  Each batch emits only its per-query top-k
+    (|Q|·k rows, never |Q|·|C|); :func:`_ranked_topk` cuts the rest.
+    """
+    id_t = _spark_type_of(queries, id_col)
+    live = queries.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
+    q_side = encode(live) if encode else live.select(id_col, vec_col)
+    rows = q_side.limit(budget + 1).collect()
+    if len(rows) > budget:
+        raise ValueError(
+            f"{tier} queries side exceeds the broadcast budget "
+            f"({budget}); swap sides or raise the budget"
+        )
+    schema = f"query_id {id_t}, neighbor_id {id_t}, score {score_t}"
+    if not rows:
+        return queries.sparkSession.createDataFrame([], schema + ", rank int")
+    qids = np.array([r[id_col] for r in rows])
+    payload, corpus = prepare(rows)
+    bc = queries.sparkSession.sparkContext.broadcast((qids, payload))
+    kk = int(k)
+
+    def _score(batches):
+        ids, P = bc.value
+        for pdf in batches:
+            pdf = pdf.dropna()
+            if len(pdf) == 0:
+                continue
+            pdf = pdf.sort_values(id_col, kind="stable")
+            nid = pdf[id_col].to_numpy()
+            scores = batch_scores(P, pdf)
+            for lo in range(0, len(ids), _QUERY_CHUNK):
+                hi = min(lo + _QUERY_CHUNK, len(ids))
+                valid = ids[lo:hi, None] != nid[None, :]
+                rq, rn, rs = _batch_topk_rows(
+                    ids[lo:hi], scores(lo, hi), valid, nid, kk
+                )
+                yield pd.DataFrame(
+                    {"query_id": rq, "neighbor_id": rn, "score": rs}
+                )
+
+    return _ranked_topk(corpus.mapInPandas(_score, schema), k)
 
 
 def normalized(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -399,9 +484,9 @@ def _cell_udf(Cn: np.ndarray):
 def _probe_cells_udf(Cn: np.ndarray, n_probe: int):
     """Vectorized nearest-``n_probe``-cells probe against a broadcast
     normalized centroid matrix — the ONE probe kernel :func:`ivf_topk`
-    and :func:`ivf_sq_topk` share, so the two tiers' probe sets cannot
-    drift (the round-9 stable-sort tie fix would otherwise have to land
-    in two copies)."""
+    and :func:`ivf_sq_topk_ladder` (hence :func:`ivf_sq_topk`) share,
+    so the tiers' probe sets cannot drift (the round-9 stable-sort tie
+    fix would otherwise have to land in two copies)."""
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _probe_cells(vecs: pd.Series) -> pd.Series:
@@ -541,14 +626,7 @@ def ivf_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("score", dot(F.col("__qv"), F.col("__cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _ranked_topk(cand, k)
 
 
 def lsh_topk(
@@ -601,14 +679,7 @@ def lsh_topk(
         .join(c, "neighbor_id")
         .withColumn("score", dot(F.col("__qv"), F.col("__cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _ranked_topk(cand, k)
 
 
 def train_pq_codebooks(
@@ -753,13 +824,12 @@ def pq_topk(
     product (pinned in tests); otherwise recall degrades with
     quantization error, the PQ trade.
 
-    Plan shape: encode = one Arrow pass over the corpus; queries are a
-    bounded broadcast (the :func:`brute_force_topk` small-side
-    contract, enforced at ``broadcast_queries_max``); scoring is
-    ``mapInPandas`` over encoded batches emitting only each batch's
-    per-query top-k, so shuffle volume is |queries|·k per batch, never
-    |queries|·|corpus|.  Ties break to min neighbor id, matching the
-    exact tier.
+    Scoring is the shared broadcast-query scorer
+    (:func:`_broadcast_query_topk`): the per-query ADC tables are the
+    broadcast payload (bounded at ``broadcast_queries_max``) and each
+    code batch's score matrix is the table-lookup sum; encode is one
+    Arrow pass over the corpus.  Ties break to min neighbor id,
+    matching the exact tier.
 
     **Serving path**: pass ``codes=`` a persisted :func:`pq_encode`
     table (``id_col``, codes) to skip the per-query corpus encode pass
@@ -777,89 +847,49 @@ def pq_topk(
             "pq_topk: codes= requires codebooks= (ADC lookup tables are "
             "built from the codebooks the codes were encoded under)"
         )
-    # queries first: an empty query side must return empty (matching
-    # brute_force_topk) BEFORE any codebook training runs — training on
-    # a small corpus can legitimately raise, and a driver-side k-means
-    # for zero queries is wasted work either way
-    q_rows = queries.select(id_col, vec_col).limit(broadcast_queries_max + 1).collect()
-    if len(q_rows) > broadcast_queries_max:
-        raise ValueError(
-            "pq_topk queries side exceeds the broadcast budget "
-            f"({broadcast_queries_max}); swap sides or raise the budget"
-        )
-    if not q_rows:
-        spark = queries.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
-        )
 
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            corpus, num_subspaces, num_centroids, vec_col, seed=seed,
-            order_col=id_col,
-        )
-    B = np.asarray(codebooks, dtype=np.float64)
-    M, K, dsub = B.shape
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    # per-query ADC tables: adc[q, m, j] = <q_m, c_{m,j}>
-    adc = np.einsum("qmd,mjd->qmj", Q.reshape(len(Q), M, dsub), B)
-    sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((qids, adc))
-
-    if codes is not None:
-        probe = (
-            codes.select(F.size("codes").alias("m")).limit(1).collect()
-        )
+    def prepare(rows):
+        # runs only for a non-empty query side: an empty one returns
+        # empty (matching brute_force_topk) BEFORE any codebook training
+        # — training on a small corpus can legitimately raise, and a
+        # driver-side k-means for zero queries is wasted work either way
+        B = codebooks
+        if B is None:
+            B = train_pq_codebooks(
+                corpus, num_subspaces, num_centroids, vec_col, seed=seed,
+                order_col=id_col,
+            )
+        B = np.asarray(B, dtype=np.float64)
+        M, K, dsub = B.shape
+        Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+        # per-query ADC tables: adc[q, m, j] = <q_m, c_{m,j}>
+        adc = np.einsum("qmd,mjd->qmj", Q.reshape(len(Q), M, dsub), B)
+        if codes is None:
+            return adc, pq_encode(
+                corpus.filter(F.col(vec_col).isNotNull()), B, id_col, vec_col
+            )
+        probe = codes.select(F.size("codes").alias("m")).limit(1).collect()
         if probe and probe[0]["m"] != M:
             raise ValueError(
                 f"pq_topk: stored codes have {probe[0]['m']} subspaces, "
                 f"codebooks have {M} — mismatched index artifacts"
             )
-        encoded = codes.select(F.col(id_col).alias("neighbor_id"), "codes")
-    else:
-        encoded = pq_encode(corpus, B, id_col, vec_col).withColumnRenamed(
-            id_col, "neighbor_id"
-        )
+        return adc, codes.select(id_col, "codes")
 
-    def _score(batches):
-        ids, tables = bc.value
-        nq = len(ids)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack([np.asarray(c) for c in pdf["codes"]])
-            nid = pdf["neighbor_id"].to_numpy()
-            S = np.zeros((nq, len(codes)))
-            for m in range(M):
-                S += tables[:, m, codes[:, m]]
-            # self-pairs must not shadow a real neighbor in the batch
-            # top-k: mask them before ranking
-            S = np.where(ids[:, None] == nid[None, :], -np.inf, S)
-            kk = min(k, S.shape[1])
-            # per-batch per-query top-k (score desc, neighbor id asc)
-            order = np.lexsort((nid[None, :].repeat(nq, 0), -S), axis=1)[:, :kk]
-            qi = np.repeat(np.arange(nq), kk)
-            ni = order.ravel()
-            keep = np.isfinite(S[qi, ni])
-            yield pd.DataFrame(
-                {
-                    "query_id": ids[qi][keep],
-                    "neighbor_id": nid[ni][keep],
-                    "score": S[qi, ni][keep],
-                }
-            )
+    def adc_scores(tables, pdf):
+        C = np.stack([np.asarray(c) for c in pdf["codes"]])
 
-    partial = encoded.mapInPandas(
-        _score, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        def chunk(lo, hi):
+            S = np.zeros((hi - lo, len(C)))
+            for m in range(tables.shape[1]):
+                S += tables[lo:hi, m, C[:, m]]
+            return S
+
+        return chunk
+
+    return _broadcast_query_topk(
+        "pq_topk", queries, k, id_col, vec_col, broadcast_queries_max,
+        prepare, adc_scores, score_t="double",
     )
 
 
@@ -949,98 +979,48 @@ def sq_topk(
     the compact artifact — the corpus float vectors are never read
     (``corpus`` is then ignored; pass ``None``).
 
-    Plan shape mirrors :func:`pq_topk`'s ADC scorer, the measured-fast
-    form for a compressed scan tier: the query codes are a bounded
-    broadcast (enforced at ``broadcast_queries_max``), scoring is
-    ``mapInPandas`` over code batches — ONE exact int64 numpy matmul
-    per batch instead of a per-pair expression (an
-    ``aggregate(zip_with(...))`` scoring column evaluates interpreted
-    per element, and an unrolled fixed-width sum outgrows the JIT
-    method limit: both measured slower at 1M pairs — 0.55 s / 1.7 s vs
-    0.48 s for the matmul) — and each batch emits only its per-query
-    top-k, so shuffle volume is |Q|·k per batch, never |Q|·|C|.  At
-    100 TB the composed path is IVF cells over SQ codes
-    (:func:`ivf_sq_topk`), which shares this integer-kernel scoring.
+    Scoring is the shared broadcast-query scorer
+    (:func:`_broadcast_query_topk`), the measured-fast form for a
+    compressed scan tier: the query codes are the broadcast payload
+    (bounded at ``broadcast_queries_max``) and each code batch's score
+    matrix is ONE exact int64 numpy matmul instead of a per-pair
+    expression (an ``aggregate(zip_with(...))`` scoring column
+    evaluates interpreted per element, and an unrolled fixed-width sum
+    outgrows the JIT method limit: both measured slower at 1M pairs —
+    0.55 s / 1.7 s vs 0.48 s for the matmul).  At 100 TB the composed
+    path is IVF cells over SQ codes (:func:`ivf_sq_topk`), which
+    computes the same integer score per candidate.
 
     Ties broken by minimum neighbor id, matching every other tier.
     """
     if codes is None and corpus is None:
         raise ValueError("sq_topk: pass corpus or codes")
-    id_t = _spark_type_of(queries, id_col)
-    q_rows = (
-        sq_encode(
-            queries.filter(
-                F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
-            ),
-            id_col,
-            vec_col,
-        )
-        .limit(broadcast_queries_max + 1)
-        .collect()
-    )
-    if len(q_rows) > broadcast_queries_max:
-        raise ValueError(
-            "sq_topk queries side exceeds the broadcast budget "
-            f"({broadcast_queries_max}); swap sides or raise the budget"
-        )
-    if not q_rows:
-        spark = queries.sparkSession
-        return spark.createDataFrame(
-            [], f"query_id {id_t}, neighbor_id {id_t}, score long, rank int"
-        )
-    if codes is None:
-        codes = sq_encode(spread(corpus), id_col, vec_col)
-    # ids keep their native type (string/uuid ids ranked the old
-    # expression form and must keep working); scores/codes are int64
-    qids = np.array([r[id_col] for r in q_rows])
-    Q = np.stack([np.asarray(r["codes"], dtype=np.int64) for r in q_rows])
-    qsc = np.array([r["scale_micro"] for r in q_rows], dtype=np.int64)
-    bc = queries.sparkSession.sparkContext.broadcast((qids, Q, qsc))
-    kk_req = int(k)
 
-    def _score(batches):
-        ids, QQ, qs = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # NULL id/codes rows can never win a rank — drop them
-            # instead of crashing the stack() (the old expression form
-            # scored them NULL, which sorted last)
-            pdf = pdf[pdf[id_col].notna() & pdf["codes"].notna()]
-            if len(pdf) == 0:
-                continue
-            # pre-sort by neighbor id: the stable argsort in
-            # _batch_topk_rows then breaks score ties to the smaller id
-            pdf = pdf.sort_values(id_col, kind="stable")
-            C = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["codes"]])
-            if C.shape[1] != QQ.shape[1]:
-                raise ValueError(
-                    f"sq_topk: stored codes have width {C.shape[1]}, "
-                    f"queries {QQ.shape[1]} — mismatched index artifacts"
-                )
-            cs = pdf["scale_micro"].to_numpy(dtype=np.int64)
-            nid = pdf[id_col].to_numpy()
-            for lo in range(0, len(ids), _QUERY_CHUNK):
-                hi = min(lo + _QUERY_CHUNK, len(ids))
-                # exact int64 arithmetic end-to-end — the value-hash
-                # oracle depends on it (no float accumulation anywhere)
-                S = (QQ[lo:hi] @ C.T) * qs[lo:hi, None] * cs[None, :]
-                valid = ids[lo:hi, None] != nid[None, :]
-                rq, rn, rs = _batch_topk_rows(ids[lo:hi], S, valid, nid, kk_req)
-                yield pd.DataFrame(
-                    {"query_id": rq, "neighbor_id": rn, "score": rs}
-                )
+    def prepare(rows):
+        Q = np.stack([np.asarray(r["codes"], dtype=np.int64) for r in rows])
+        qsc = np.array([r["scale_micro"] for r in rows], dtype=np.int64)
+        c = codes if codes is not None else sq_encode(
+            spread(corpus), id_col, vec_col
+        )
+        return (Q, qsc), c.select(id_col, "codes", "scale_micro")
 
-    partial = codes.select(id_col, "codes", "scale_micro").mapInPandas(
-        _score, f"query_id {id_t}, neighbor_id {id_t}, score long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    def sq_scores(payload, pdf):
+        Q, qs = payload
+        C = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["codes"]])
+        if C.shape[1] != Q.shape[1]:
+            raise ValueError(
+                f"sq_topk: stored codes have width {C.shape[1]}, "
+                f"queries {Q.shape[1]} — mismatched index artifacts"
+            )
+        cs = pdf["scale_micro"].to_numpy(dtype=np.int64)
+        # exact int64 arithmetic end-to-end — the value-hash oracle
+        # depends on it (no float accumulation anywhere)
+        return lambda lo, hi: (Q[lo:hi] @ C.T) * qs[lo:hi, None] * cs[None, :]
+
+    return _broadcast_query_topk(
+        "sq_topk", queries, k, id_col, vec_col, broadcast_queries_max,
+        prepare, sq_scores,
+        encode=lambda q: sq_encode(q, id_col, vec_col),
     )
 
 
@@ -1113,75 +1093,28 @@ def _floored_micro_topk(
     ``recall_report`` oracles against, and the candidate generator for
     :func:`mmr_rerank`.
 
-    Same plan shape as :func:`sq_topk`: bounded broadcast of the query
-    matrix, ``mapInPandas`` over corpus batches emitting only each
-    batch's per-query top-k (shuffle volume |Q|·k per batch), final
-    rank window.  Ties break to min neighbor id.
+    Scored by the shared broadcast-query scorer
+    (:func:`_broadcast_query_topk`): the query matrix is the broadcast
+    payload and each corpus batch's score matrix is
+    :func:`_floored_micro_matrix`.  Ties break to min neighbor id.
 
     Returns (query_id, neighbor_id, score bigint, rank).
     """
-    id_t = _spark_type_of(queries, id_col)
-    q_rows = (
-        queries.select(id_col, vec_col)
-        .filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-        .limit(broadcast_queries_max + 1)
-        .collect()
-    )
-    if len(q_rows) > broadcast_queries_max:
-        raise ValueError(
-            "int_micro queries side exceeds the broadcast budget "
-            f"({broadcast_queries_max}); swap sides or raise the budget"
-        )
-    if not q_rows:
-        spark = queries.sparkSession
-        return spark.createDataFrame(
-            [], f"query_id {id_t}, neighbor_id {id_t}, score long, rank int"
-        )
-    # ids keep their native type (string ids must keep working — the
-    # expression form this kernel replaced was id-type-agnostic)
-    qids = np.array([r[0] for r in q_rows])
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    bc = queries.sparkSession.sparkContext.broadcast((qids, Q))
-    kk_req = int(k)
 
-    def _score(batches):
-        ids, QQ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # NULL id/vector rows scored NULL (ranked last) in the old
-            # expression form — drop them instead of crashing the stack
-            pdf = pdf[pdf[id_col].notna() & pdf[vec_col].notna()]
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(id_col, kind="stable")
-            C = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            nid = pdf[id_col].to_numpy()
-            for lo in range(0, len(ids), _QUERY_CHUNK):
-                hi = min(lo + _QUERY_CHUNK, len(ids))
-                # chunking bounds the score matrix independently of the
-                # broadcast budget; the kernel reuses one float temp
-                # per batch and stays per-query inside (the vectorized
-                # 3-D forms measured slower — see _floored_micro_matrix)
-                S = _floored_micro_matrix(C, QQ[lo:hi])
-                valid = ids[lo:hi, None] != nid[None, :]
-                rq, rn, rs = _batch_topk_rows(ids[lo:hi], S, valid, nid, kk_req)
-                yield pd.DataFrame(
-                    {"query_id": rq, "neighbor_id": rn, "score": rs}
-                )
+    def prepare(rows):
+        Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+        return Q, spread(corpus).select(id_col, vec_col)
 
-    partial = spread(corpus).select(id_col, vec_col).mapInPandas(
-        _score, f"query_id {id_t}, neighbor_id {id_t}, score long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    def micro_scores(Q, pdf):
+        C = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+        # the kernel reuses one float temp per batch and stays per-query
+        # inside (the vectorized 3-D forms measured slower — see
+        # _floored_micro_matrix)
+        return lambda lo, hi: _floored_micro_matrix(C, Q[lo:hi])
+
+    return _broadcast_query_topk(
+        "int_micro", queries, k, id_col, vec_col, broadcast_queries_max,
+        prepare, micro_scores,
     )
 
 
@@ -1580,110 +1513,25 @@ def ivf_sq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k over the composed IVF×SQ index: probe the
-    ``nprobe`` nearest cells (same probe kernel as :func:`ivf_topk`),
-    equi-join the PARTITIONED stored code lists (the broadcast query
-    side feeds dynamic partition pruning, so the scan reads only the
-    probed cells' files), and rank candidates by the same integer SQ
-    score :func:`sq_topk` computes — so with ``nprobe == nlist`` the
-    result EQUALS ``sq_topk`` exactly (integer scores, same tie-break;
-    parity-pinned in tests), and smaller ``nprobe`` trades recall for
-    reading 1/``nlist``-scale data per query.
+    """Approximate top-k over the composed IVF×SQ index — the one-rung
+    case of :func:`ivf_sq_topk_ladder` (``nprobes=(nprobe,)``, its
+    ``nprobe`` column dropped): probe the ``nprobe`` nearest cells
+    (same probe kernel as :func:`ivf_topk`), equi-join the PARTITIONED
+    stored code lists (the broadcast query side feeds dynamic partition
+    pruning, so the scan reads only the probed cells' files), and rank
+    candidates by the same integer SQ score :func:`sq_topk` computes —
+    so with ``nprobe == nlist`` the result EQUALS ``sq_topk`` exactly
+    (integer scores, same tie-break; parity-pinned in tests), and
+    smaller ``nprobe`` trades recall for reading 1/``nlist``-scale data
+    per query.
 
     The full-precision corpus is never touched at query time — that is
     the whole point: per-query cost is (probed-partition scan of int8
-    codes) + (bounded integer dot per candidate).  Scoring runs as a
-    per-batch kernel over the joined candidate stream emitting only each
-    batch's per-query leaders (≤ |Q|·k rows per batch), then one exact
-    rank window — NO per-query group is ever materialized in memory, so
-    a hot cell sort-spills in the window instead of OOMing a task (the
-    hazard a groupBy-apply form would have), and memory stays bounded by
-    the Arrow batch regardless of nprobe or skew.  Rows whose id/codes
-    are NULL are excluded (they can never win a rank).
+    codes) + (bounded integer dot per candidate).
     """
-    C = np.asarray(centroids, dtype=np.float64)
-    Cn = _normalize_rows(C)
-    _probe_cells = _probe_cells_udf(Cn, min(nprobe, len(C)))
-
-    q = F.broadcast(
-        sq_encode(
-            queries.filter(
-                F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
-            ),
-            id_col,
-            vec_col,
-        )
-        .join(
-            queries.select(
-                F.col(id_col),
-                F.explode(_probe_cells(F.col(vec_col))).alias("cell"),
-            ),
-            id_col,
-        )
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("codes").alias("__qc"),
-            F.col("scale_micro").alias("__qs"),
-            "cell",
-        )
-    )
-    c = lists.filter(
-        F.col(id_col).isNotNull() & F.col("codes").isNotNull()
-    ).select(
-        "cell",
-        F.col(id_col).alias("neighbor_id"),
-        F.col("codes").alias("__cc"),
-        F.col("scale_micro").alias("__cs"),
-    )
-    # no pair-dedup needed: each corpus vector lives in exactly ONE
-    # cell and a query's probed cells are distinct, so (query_id,
-    # neighbor_id) is already unique — a dropDuplicates here would
-    # be a gratuitous shuffle
-    cand = q.join(c, "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    kk = int(k)
-    id_t = _spark_type_of(lists, id_col)
-
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            QC = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["__qc"]])
-            CC = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["__cc"]])
-            s = (
-                np.einsum("ij,ij->i", QC, CC)
-                * pdf["__qs"].to_numpy(dtype=np.int64)
-                * pdf["__cs"].to_numpy(dtype=np.int64)
-            )
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    "score": s,
-                }
-            )
-            # pandas sort handles ANY orderable id dtype (string ids
-            # included — the previous int64-only kernel was a silent
-            # contract narrowing); stable, (score desc, id asc)
-            out = out.sort_values(
-                ["query_id", "score", "neighbor_id"],
-                ascending=[True, False, True],
-                kind="stable",
-            )
-            yield out.groupby("query_id", sort=False).head(kk)
-
-    partial = cand.mapInPandas(
-        _score, f"query_id {id_t}, neighbor_id {id_t}, score long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return ivf_sq_topk_ladder(
+        queries, centroids, lists, k, (nprobe,), id_col, vec_col
+    ).drop("nprobe")
 
 
 def ivf_sq_topk_ladder(
@@ -1697,16 +1545,27 @@ def ivf_sq_topk_ladder(
 ) -> DataFrame:
     """Every rung of an ``nprobe`` ladder from ONE candidate pass —
     the measurement kernel :func:`...pipelines.choose_nprobe` escalates
-    over.  Probing is the shared stable-argsort kernel, so the top-p
-    cells are a PREFIX of the top-``max(nprobes)`` order: one probe at
-    the widest rung, with each candidate carrying its cell's probe
-    rank, reproduces every narrower rung exactly as a filter
+    over, and with one rung the whole of :func:`ivf_sq_topk`.  Probing
+    is the shared stable-argsort kernel, so the top-p cells are a
+    PREFIX of the top-``max(nprobes)`` order: one probe at the widest
+    rung, with each candidate carrying its cell's probe rank,
+    reproduces every narrower rung exactly as a filter
     (``probe_rank < p``) — per-rung output is row-identical to an
-    independent :func:`ivf_sq_topk` run at that ``nprobe`` (pinned in
-    tests).  Cost: one scan of the widest rung's cells and one scoring
-    pass TOTAL, where the escalation loop paid one scan+score per rung
-    measured.  Returns (nprobe, query_id, neighbor_id, score, rank)
-    covering every requested rung.
+    independent one-rung run at that ``nprobe`` (pinned in tests).
+    Cost: one scan of the widest rung's cells and one scoring pass
+    TOTAL, where the escalation loop paid one scan+score per rung
+    measured.
+
+    Scoring runs as a per-batch kernel over the joined candidate stream
+    emitting only each batch's per-rung, per-query leaders (≤ |Q|·k
+    rows per rung per batch), then the one rank window
+    (:func:`_ranked_topk`, partitioned by ``nprobe`` too) — NO
+    per-query group is ever materialized in memory, so a hot cell
+    sort-spills in the window instead of OOMing a task (the hazard a
+    groupBy-apply form would have), and memory stays bounded by the
+    Arrow batch regardless of nprobe or skew.  Rows whose id/codes are
+    NULL are excluded (they can never win a rank).  Returns (nprobe,
+    query_id, neighbor_id, score, rank) covering every requested rung.
     """
     rungs = sorted({int(p) for p in nprobes})
     if not rungs or rungs[0] < 1:
@@ -1749,6 +1608,10 @@ def ivf_sq_topk_ladder(
         F.col("codes").alias("__cc"),
         F.col("scale_micro").alias("__cs"),
     )
+    # no pair-dedup needed: each corpus vector lives in exactly ONE
+    # cell and a query's probed cells are distinct, so (query_id,
+    # neighbor_id) is already unique — a dropDuplicates here would
+    # be a gratuitous shuffle
     cand = q.join(c, "cell").filter(F.col("query_id") != F.col("neighbor_id"))
     kk = int(k)
     id_t = _spark_type_of(lists, id_col)
@@ -1764,45 +1627,30 @@ def ivf_sq_topk_ladder(
                 * pdf["__qs"].to_numpy(dtype=np.int64)
                 * pdf["__cs"].to_numpy(dtype=np.int64)
             )
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    "score": s,
-                    "__pr": pdf["__pr"],
-                }
-            ).sort_values(
-                ["query_id", "score", "neighbor_id"],
-                ascending=[True, False, True],
-                kind="stable",
-            )
-            frames = []
-            for p in rungs:
-                sub = out[out["__pr"] < p]
-                if len(sub) == 0:
-                    continue
-                frames.append(
-                    sub.groupby("query_id", sort=False)
-                    .head(kk)
-                    .assign(nprobe=np.int32(p))
+            # pandas sort handles ANY orderable id dtype (string ids
+            # included); stable, (score desc, id asc)
+            out = (
+                pdf[["query_id", "neighbor_id", "__pr"]]
+                .assign(score=s)
+                .sort_values(
+                    ["query_id", "score", "neighbor_id"],
+                    ascending=[True, False, True],
+                    kind="stable",
                 )
-            if frames:
-                yield pd.concat(frames)[
-                    ["nprobe", "query_id", "neighbor_id", "score"]
-                ]
+            )
+            yield pd.concat(
+                out[out["__pr"] < p]
+                .groupby("query_id", sort=False)
+                .head(kk)
+                .assign(nprobe=np.int32(p))
+                for p in rungs
+            )[["nprobe", "query_id", "neighbor_id", "score"]]
 
     partial = cand.mapInPandas(
         _score,
         f"nprobe int, query_id {id_t}, neighbor_id {id_t}, score long",
     )
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("nprobe", "query_id", "neighbor_id", "score", "rank")
-    )
+    return _ranked_topk(partial, k, by=("nprobe",))
 
 
 def recall_report(

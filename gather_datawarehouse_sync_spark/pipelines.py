@@ -348,16 +348,13 @@ def choose_nprobe(
 
             lad = (
                 ivf_sq_topk_ladder(q, centroids, lists, k=k, nprobes=sub)
-                .filter(F.col("rank") <= k)
                 .select("nprobe", "query_id", "neighbor_id")
                 .withColumn("__hit", F.lit(1))
             )
             rungs_df = queries.sparkSession.createDataFrame(
                 [(int(p),) for p in sub], "nprobe int"
             )
-            ref = exact.filter(F.col("rank") <= k).select(
-                "query_id", "neighbor_id"
-            )
+            ref = exact.select("query_id", "neighbor_id")
             per = (
                 ref.crossJoin(F.broadcast(rungs_df))
                 .join(lad, ["nprobe", "query_id", "neighbor_id"], "left")

@@ -5851,6 +5851,7 @@ def test_integer_tiers_keep_string_ids_and_skip_null_vectors(spark):
         ivf_sq_invert,
         ivf_sq_topk,
         mmr_rerank,
+        pq_topk,
         sq_topk,
     )
 
@@ -5882,6 +5883,55 @@ def test_integer_tiers_keep_string_ids_and_skip_null_vectors(spark):
     assert [r["neighbor_id"] for r in sorted(iv, key=lambda r: r["rank"])] == [
         "nb", "nc"
     ]
+    # one subspace whose centroids are the corpus vectors themselves:
+    # ADC is the exact dot, and no trainer runs on three vectors
+    books = np.array([[[1.0, 0.0], [0.9, 0.1], [-1.0, 0.0]]])
+    pq = pq_topk(
+        q, emb, k=3, num_subspaces=1, num_centroids=3, codebooks=books
+    ).collect()
+    assert [r["neighbor_id"] for r in sorted(pq, key=lambda r: r["rank"])] == [
+        "nb", "nc"
+    ]
+
+
+def test_broadcast_tiers_score_every_query_chunk(spark, monkeypatch):
+    """The broadcast-query tiers score the query side in
+    ``_QUERY_CHUNK``-sized chunks so the per-batch score matrix stays
+    bounded; with the chunk shrunk to 2, five queries take three chunks
+    (the last one short), and every tier must return the same rows as
+    one whole-side chunk — ties included (half-integer vectors)."""
+    import numpy as np
+
+    from gather_datawarehouse_sync_spark.operators import similarity
+    from gather_datawarehouse_sync_spark.operators.similarity import (
+        brute_force_topk,
+        pq_topk,
+        sq_topk,
+    )
+
+    rng = np.random.default_rng(7)
+    vecs = rng.integers(-2, 3, size=(12, 4)) / 2.0
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    q = emb.filter(F.col("vec_id") < 5)
+    books = rng.integers(-2, 3, size=(2, 4, 2)) / 2.0
+
+    def run():
+        tiers = (
+            sq_topk(q, emb, k=3),
+            brute_force_topk(q, emb, k=3, metric="int_micro"),
+            pq_topk(
+                q, emb, k=3, num_subspaces=2, num_centroids=4, codebooks=books
+            ),
+        )
+        return [sorted(tuple(r) for r in df.collect()) for df in tiers]
+
+    whole = run()
+    assert all(len(rows) == 15 for rows in whole)
+    monkeypatch.setattr(similarity, "_QUERY_CHUNK", 2)
+    assert run() == whole
 
 
 def test_release_index_gate_verdicts_and_fail_fast(spark):

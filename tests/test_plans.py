@@ -744,6 +744,45 @@ def test_integer_dot_hot_loops_have_no_interpreted_hof(spark, sf_dir):
         assert df.count() > 0
 
 
+def test_broadcast_query_tiers_plan_one_scorer_and_one_window(spark, sf_dir):
+    """sq_topk, the int_micro tier and pq_topk share one broadcast-query
+    scorer: building each runs ONE execution (the bounded query-side
+    collect) and the returned plan holds ONE ``MapInPandas`` scoring
+    pass and ONE rank ``Window`` — the shape the benchmark's x_sq_ann
+    times."""
+    import numpy as np
+
+    from gather_datawarehouse_sync_spark.operators.similarity import (
+        brute_force_topk,
+        pq_topk,
+        sq_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.transform("embedding", lambda x: x.cast("double"))
+    )
+    q = emb.filter(F.col("vec_id") < 3)
+    dim = len(emb.first()["embedding"])
+    books = np.random.default_rng(3).normal(size=(4, 8, dim // 4))
+    builders = (
+        lambda: sq_topk(q, emb, k=2),
+        lambda: brute_force_topk(q, emb, k=2, metric="int_micro"),
+        lambda: pq_topk(
+            q, emb, k=2, num_subspaces=4, num_centroids=8, codebooks=books
+        ),
+    )
+    for build in builders:
+        built = []
+        assert len(_executed_plans(spark, lambda: built.append(build()))) == 1
+        nodes = [
+            n.split("\n", 1)[0].strip() for n in _final_nodes(plan_str(built[0]))
+        ]
+        # WindowGroupLimit nodes are the window's own pre-filter
+        assert nodes.count("MapInPandas") == 1, nodes
+        assert nodes.count("Window") == 1, nodes
+        assert built[0].count() == 6
+
+
 def _lambda_bodies(plan: str) -> list[str]:
     """Every ``lambdafunction(...)`` in a plan string, cut at its
     balanced closing paren (a lambda body nests arbitrarily deep, so
