@@ -713,7 +713,15 @@ def train_pq_codebooks(
     """
     sort_key = order_col if order_col is not None else vec_col
     cols = [vec_col] if sort_key == vec_col else [vec_col, sort_key]
-    rows = corpus.select(*cols).orderBy(sort_key).limit(sample).collect()
+    # NULL vectors are not training data (an ascending sort would put
+    # them first in the sample)
+    rows = (
+        corpus.select(*cols)
+        .filter(F.col(vec_col).isNotNull())
+        .orderBy(sort_key)
+        .limit(sample)
+        .collect()
+    )
     if not rows:
         raise ValueError("train_pq_codebooks: empty training sample")
     X = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
@@ -780,14 +788,21 @@ def pq_encode(
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _encode(vecs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        # a NULL vector encodes to a NULL code
+        rows = np.flatnonzero(vecs.notna().to_numpy())
+        out = [None] * len(vecs)
+        if not len(rows):
+            return pd.Series(out, dtype=object)
+        X = np.stack([np.asarray(vecs.iat[i], dtype=np.float64) for i in rows])
         codes = np.empty((len(X), M), dtype=np.int32)
         for m in range(M):
             S = X[:, m * dsub : (m + 1) * dsub]
             # same matmul trick as the trainer: no (B × K × dsub) temp
             d = (B[m] ** 2).sum(1)[None, :] - 2.0 * (S @ B[m].T)
             codes[:, m] = d.argmin(axis=1)
-        return pd.Series(list(codes))
+        for i, c in zip(rows, codes):
+            out[i] = c
+        return pd.Series(out, dtype=object)
 
     _encode = _encode.asNondeterministic()
     return spread(corpus).select(

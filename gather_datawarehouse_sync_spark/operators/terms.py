@@ -5,14 +5,20 @@ beyond its md5, ``src/DataWarehouse.js:44``); these are the standard
 corpus-analysis passes a training-data pipeline runs: per-document
 distinctive terms (TF-IDF-shaped) and corpus vocabulary statistics.
 
-Scale design: everything is expressed as explode → hash-aggregate →
-join → per-group window, i.e. the same shuffle-based shapes the dedup
-family uses.  Document-frequency is a vocabulary-keyed aggregation
-(bounded by |vocab|, not corpus size); the per-document top-k window
-partitions by doc_id, so no global sort or single-partition window
-appears anywhere.  Ranking is integer-only (tf desc, df asc, term asc)
-— no floating-point scores need to cross the engine boundary, which
-keeps the DuckDB oracle hash-exact.
+Scale design: the vocabulary-wide passes are expressed as explode →
+hash-aggregate → join → per-group window, i.e. the same shuffle-based
+shapes the dedup family uses.  Document-frequency is a vocabulary-keyed
+aggregation (bounded by |vocab|, not corpus size); the per-document
+top-k window partitions by doc_id, so no global sort or single-partition
+window appears anywhere.  Ranking is integer-only (tf desc, df asc,
+term asc) — no floating-point scores need to cross the engine boundary,
+which keeps the DuckDB oracle hash-exact.
+
+BM25 (:func:`bm25_topk`) scores a fixed, short query-term list, so it
+explodes nothing: each document stays one row carrying its length and
+one count per query term, read by one scalar statistics aggregate and
+one broadcast cross join — O(q · tokens) per document, no shuffle keyed
+by term and nothing materialized.
 """
 
 from __future__ import annotations
@@ -120,11 +126,25 @@ def bm25_topk(
     one.  Ranking between the tiers agrees except where the rational
     IDF's stronger rare-term weighting is the documented deviation.
 
-    Scale shape (both tiers): the term list broadcasts into the
-    postings filter (tf rows exist only for docs containing ≥ 1 query
-    term), document frequency is a |terms|-row aggregate, corpus stats
-    are ONE scalar agg row cross-joined in, and the final top-k is
-    orderBy().limit() — TakeOrderedAndProject, no global window.
+    Plan shape (both tiers share it): each document stays ONE row.
+    One projection over the tokens gives ``(id, dl, tf_0 … tf_{q−1})``,
+    each ``tf_j`` a ``filter`` over the token attribute — O(q · tokens)
+    per document, no explode, no postings shuffle, no query-term table.
+    One scalar aggregate gives ``n_docs``, the total length and every
+    ``df_j``; documents with no tokens count in neither.  Each row
+    cross-joins that broadcast row, sums its per-term contributions
+    (NULL when it matches no term), and the scores end in
+    ``orderBy().limit()`` — TakeOrderedAndProject, no global window.
+    The statistics and the scores each read the corpus once and
+    tokenize each document once; building collects and materializes
+    nothing.
+
+    Precondition: ONE row per id.  Each row scores alone — two rows
+    sharing an id are two documents (each counts in ``n_docs`` and in
+    every ``df``) and may both appear in the result.
+
+    Repeated query terms count once (set semantics, matching an
+    oracle's ``IN`` list and the tf tier's ``array_contains``).
     Returns (``id_col``, score) — ``scale``-scaled integer units for
     ``"rational"``, plain double for ``"log"``.
     """
@@ -134,125 +154,94 @@ def bm25_topk(
     if idf not in ("rational", "log"):
         raise ValueError(f"idf must be rational|log, got {idf!r}")
     K, B, S = int(k1_milli), int(b_milli), int(scale)
-    tok = spread(docs).select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
-    # widen dl to BIGINT at creation (the quality_score_bp rule):
+    terms = list(dict.fromkeys(query_terms))
+    tfs = [F.col(f"tf_{j}") for j in range(len(terms))]
+    dfs = [F.col(f"df_{j}") for j in range(len(terms))]
+
+    def _count(term: str):
+        # a one-arg lambda over the projected token ATTRIBUTE: a lambda
+        # body gets no subexpression elimination, so the tokenizer
+        # inlined here would re-run per token
+        return F.size(F.filter(F.col("toks"), lambda t: t == F.lit(term)))
+
+    # widen dl and tf to BIGINT at creation (the quality_score_bp rule):
     # size() is INT and the rational tier's `1000000 * dl` would
     # overflow int32 for any document past ~2,147 tokens (a ~15 KB
-    # text) — ANSI crash on Spark 4 defaults; the widened dl keeps
-    # every downstream milli product (__r_milli, __ln_milli) BIGINT
-    dl = tok.select(
-        "id", F.size("toks").cast("bigint").alias("dl")
-    ).filter(F.col("dl") > 0)
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("total_len"),
-    ).select(
-        "n_docs",
-        F.expr("(1000 * total_len) DIV n_docs").alias("avgdl_milli"),
-    )
-    # dedupe: a repeated query term would duplicate broadcast rows and
-    # the postings join would then double-count every token occurrence
-    # (nonlinear tf inflation) — dict.fromkeys keeps first-seen order so
-    # the plan stays deterministic, matching an oracle's IN-list set
-    # semantics and the tf tier's array_contains
-    terms_df = F.broadcast(
-        docs.sparkSession.createDataFrame(
-            [(t,) for t in dict.fromkeys(query_terms)], "term string"
-        )
-    )
-    # dl rides THROUGH the tf aggregation (it is constant per doc, so
-    # first() under the (id, term) group is exact): the former
-    # ``tf.join(dl, "id")`` re-shuffled both sides by id just to
-    # re-attach a number the exploded rows already carried — one whole
-    # exchange+join removed from the scoring plan (guide §2.4); the
-    # separate ``dl`` frame remains only for the corpus stats aggregate.
-    tf = (
-        tok.select(
+    # text) — ANSI crash on Spark 4 defaults
+    per_doc = (
+        spread(docs)
+        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+        .select(
             "id",
             F.size("toks").cast("bigint").alias("dl"),
-            F.explode("toks").alias("term"),
+            *[_count(t).cast("bigint").alias(f"tf_{j}") for j, t in enumerate(terms)],
         )
-        .join(terms_df, "term")
-        .groupBy("id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-        # materialize the postings slice ONCE (r19): tf feeds both the
-        # scoring join and the document-frequency aggregate, and Spark
-        # shares no common subtrees — without this the whole
-        # tokenize→explode→terms-join→aggregate pipeline executed twice
-        # per query (plans showed the tokenizer 8×).  Bounded: one row
-        # per (matching doc, query term) — four narrow columns, ≤
-        # |terms| × matching docs, the postings-list size every keyword
-        # engine materializes; never corpus-width text.
-        .localCheckpoint(eager=False)
     )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    nonempty = F.col("dl") > 0
+    stats = per_doc.agg(
+        F.count_if(nonempty).alias("n_docs"),
+        # NULL (not 0) when no document has a token, so the avgdl
+        # division yields NULL instead of dividing by zero
+        F.sum(F.when(nonempty, F.col("dl"))).alias("total_len"),
+        *[F.count_if(tf > 0).alias(f"df_{j}") for j, tf in enumerate(tfs)],
+    )
     if idf == "log":
-        # the published Okapi: true log-IDF, plain double arithmetic —
-        # the serving tier (same joins/stats shape; only the arithmetic
-        # and the score type differ)
+        # the published Okapi: true log-IDF, plain double arithmetic
         k1, b = K / 1000.0, B / 1000.0
-        fstats = dl.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-        )
+        stats = stats.withColumn("avgdl", F.col("total_len") / F.col("n_docs"))
+        norm = k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
         # raw ln((N−df+½)/(df+½)) goes NEGATIVE when df > N/2, so a very
         # common query term would SUBTRACT from scores and push a doc
         # matching two terms below one matching a single rarer term —
         # floor the IDF at 0 (the Lucene convention): common terms
         # contribute nothing, never a penalty
-        contrib = (
+        contribs = [
             F.greatest(
                 F.lit(0.0),
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ),
+                F.log((F.col("n_docs") - df + 0.5) / (df + 0.5)),
             )
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+            * (tf * (k1 + 1.0))
+            / (tf + norm)
+            for tf, df in zip(tfs, dfs)
+        ]
+        score_type = "double"
+    else:
+        stats = stats.withColumn(
+            "avgdl_milli", F.expr("(1000 * total_len) DIV n_docs")
         )
-        return (
-            tf.join(F.broadcast(dfreq), "term")
-            .crossJoin(F.broadcast(fstats))
-            .groupBy("id")
-            .agg(F.sum(contrib).cast("double").alias("score"))
-            .select(F.col("id").alias(id_col), "score")
-            .orderBy(F.col("score").desc(), id_col)
-            .limit(k)
+        ln_milli = (
+            f"((({1000 - B} * 1000) + {B} * ((1000000 * dl) DIV avgdl_milli))"
+            " DIV 1000)"
         )
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "__r_milli", F.expr("(1000000 * dl) DIV avgdl_milli")
-        )
-        .withColumn(
-            "__ln_milli",
-            F.expr(f"(({1000 - B} * 1000) + {B} * __r_milli) DIV 1000"),
-        )
-        .withColumn(
-            "__denom_milli",
-            F.expr(f"1000 * tf + ({K} * __ln_milli) DIV 1000"),
-        )
-        .withColumn(
-            "__w_milli",
-            F.expr(f"(1000 * tf * {1000 + K}) DIV __denom_milli"),
-        )
-        .withColumn(
-            "__contrib",
+        contribs = [
             F.expr(
-                f"((2 * n_docs - 2 * df + 1) * __w_milli * {S}) "
-                "DIV (2 * df + 1)"
-            ),
-        )
-    )
+                f"((2 * n_docs - 2 * df_{j} + 1) * "
+                f"((1000 * tf_{j} * {1000 + K}) DIV "
+                f"(1000 * tf_{j} + ({K} * {ln_milli}) DIV 1000)) * {S}) "
+                f"DIV (2 * df_{j} + 1)"
+            )
+            for j in range(len(terms))
+        ]
+        score_type = "bigint"
+    score = F.lit(0)
+    for tf, c in zip(tfs, contribs):
+        score = score + F.when(tf > 0, c).otherwise(0)
+    matched = F.lit(False)
+    for tf in tfs:
+        matched = matched | (tf > 0)
+    # a document matching no term scores NULL, which sorts after every
+    # match, and is dropped AFTER the limit: a filter on the tf columns
+    # below it would be pushed under the projection and the repartition
+    # onto the scan, re-running the tokenizer once per query term
     return (
-        scored.groupBy("id")
-        .agg(F.sum("__contrib").cast("bigint").alias("score"))
-        .select(F.col("id").alias(id_col), "score")
+        per_doc.crossJoin(F.broadcast(stats))
+        .select(
+            F.col("id").alias(id_col),
+            F.when(matched, score).cast(score_type).alias("score"),
+        )
         .orderBy(F.col("score").desc(), id_col)
         .limit(k)
+        .filter(F.col("score").isNotNull())
     )
 
 

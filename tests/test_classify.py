@@ -272,6 +272,25 @@ def test_pq_trainer_rejects_bad_shapes(spark):
         train_pq_codebooks(df, num_subspaces=5, num_centroids=64)
 
 
+def test_pq_null_vector_trains_and_encodes(spark):
+    """A NULL vector is not training data and encodes to a NULL code;
+    the other rows train and encode as if it were absent."""
+    from gather_datawarehouse_sync_spark.operators.similarity import (
+        pq_encode,
+        train_pq_codebooks,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, None), (3, [10.0, 10.0])],
+        "vec_id long, embedding array<double>",
+    )
+    books = train_pq_codebooks(df, num_subspaces=1, num_centroids=2)
+    assert sorted(books[0].tolist()) == [[0.0, 0.0], [10.0, 10.0]]
+    fixed = np.array([[[0.0, 0.0], [10.0, 10.0]]])
+    codes = {r["vec_id"]: r["codes"] for r in pq_encode(df, fixed).collect()}
+    assert codes == {1: [0], 2: None, 3: [1]}
+
+
 def test_pretrain_mix_default_weights_empty_map(spark, sf_dir):
     """mix_weights_milli=None -> lit_map({}) must be a TYPED empty map
     (an untyped one fails analysis on the first lookup — review fix);

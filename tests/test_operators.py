@@ -1727,14 +1727,57 @@ def test_interpolate_linear_blend_and_edges(spark):
 # ---------------------------------------------------------------------------
 
 
+def _bm25_reference(corpus, terms, idf="rational", K=1200, B=750, S=100):
+    """BM25 by its documented definition in plain Python: the ascii
+    tokenization, documents with no tokens (NULL text included) outside
+    ``n_docs`` and the average length, repeated query terms counted
+    once, and each document a separate row.  Returns {id: score} for
+    every document matching at least one term — the milli-floored
+    integer score for ``"rational"``, the double Okapi score with
+    log-IDF floored at 0 for ``"log"``."""
+    import math
+    import re
+
+    toks = {
+        i: [w for w in re.split(r"[^a-z0-9]+", (t or "").lower()) if w]
+        for i, t in corpus.items()
+    }
+    dl = {i: len(ts) for i, ts in toks.items() if ts}
+    n_docs, total = len(dl), sum(dl.values())
+    terms = list(dict.fromkeys(terms))
+    df = {t: sum(1 for ts in toks.values() if t in ts) for t in terms}
+    want = {}
+    for i, ts in toks.items():
+        hits = [(t, ts.count(t)) for t in terms if t in ts]
+        if not hits:
+            continue
+        if idf == "log":
+            k1, b, avgdl = K / 1000.0, B / 1000.0, total / n_docs
+            want[i] = sum(
+                max(0.0, math.log((n_docs - df[t] + 0.5) / (df[t] + 0.5)))
+                * (tf * (k1 + 1.0))
+                / (tf + k1 * (1.0 - b + b * dl[i] / avgdl))
+                for t, tf in hits
+            )
+            continue
+        avgdl_milli = (1000 * total) // n_docs
+        score = 0
+        for t, tf in hits:
+            r_milli = (1_000_000 * dl[i]) // avgdl_milli
+            ln_milli = ((1000 - B) * 1000 + B * r_milli) // 1000
+            denom_milli = 1000 * tf + (K * ln_milli) // 1000
+            w_milli = (1000 * tf * (1000 + K)) // denom_milli
+            score += ((2 * n_docs - 2 * df[t] + 1) * w_milli * S) // (2 * df[t] + 1)
+        want[i] = score
+    return want
+
+
 def test_bm25_matches_integer_definition(spark):
     """bm25_topk against an independent pure-Python reimplementation of
     the documented milli-floored arithmetic (same quantization points,
     same rational IDF) on a crafted corpus with length variation, term
     repetition, and a non-matching doc — every score must be integer-
     identical, and the non-matching doc absent."""
-    import re
-
     from gather_datawarehouse_sync_spark.operators.terms import bm25_topk
 
     corpus = {
@@ -1744,36 +1787,16 @@ def test_bm25_matches_integer_definition(spark):
         4: "spark " * 10 + "engine",
     }
     terms = ["spark", "engine"]
-    K, B, S = 1200, 750, 100
-
-    toks = {i: [w for w in re.split(r"[^a-z0-9]+", t.lower()) if w] for i, t in corpus.items()}
-    dl = {i: len(ts) for i, ts in toks.items() if ts}
-    n_docs, total = len(dl), sum(dl.values())
-    avgdl_milli = (1000 * total) // n_docs
-    df = {t: sum(1 for ts in toks.values() if t in ts) for t in terms}
-    want = {}
-    for i, ts in toks.items():
-        score = 0
-        for t in terms:
-            tf = ts.count(t)
-            if tf == 0:
-                continue
-            r_milli = (1_000_000 * dl[i]) // avgdl_milli
-            ln_milli = ((1000 - B) * 1000 + B * r_milli) // 1000
-            denom_milli = 1000 * tf + (K * ln_milli) // 1000
-            w_milli = (1000 * tf * (1000 + K)) // denom_milli
-            score += ((2 * n_docs - 2 * df[t] + 1) * w_milli * S) // (2 * df[t] + 1)
-        if score:
-            want[i] = score
+    want = _bm25_reference(corpus, terms)
 
     sdf = spark.createDataFrame(list(corpus.items()), "doc_id long, text string")
     got = {r["doc_id"]: r["score"] for r in bm25_topk(sdf, terms, k=10).collect()}
     assert got == want
     assert 3 not in got
 
-    # duplicate query terms are set-semantics no-ops (the broadcast term
-    # list dedupes) — a repeated term must NOT double-count tf, matching
-    # both the oracle's IN-list and the hybrid tf tier's array_contains
+    # duplicate query terms are set-semantics no-ops — a repeated term
+    # must NOT double-count tf, matching both the oracle's IN-list and
+    # the hybrid tf tier's array_contains
     dup = {
         r["doc_id"]: r["score"]
         for r in bm25_topk(sdf, ["spark", "engine", "spark", "spark"], k=10).collect()
@@ -1783,28 +1806,11 @@ def test_bm25_matches_integer_definition(spark):
     # idf="log": the PUBLISHED Okapi scorer (log-IDF floored at 0 per
     # the Lucene convention, plain double arithmetic) against an
     # independent pure-Python implementation — tolerance, not hash
-    # (libm), per the documented tier contract.  "engine" has
-    # df=3 of N=4, so its raw ln IDF is NEGATIVE — the floor must zero
-    # it out, not let it subtract from scores.
-    import math
-
-    assert df["engine"] > n_docs / 2  # the negative-IDF case is live
-    avgdl = total / n_docs
-    want_log = {}
-    for i, ts in toks.items():
-        score, matched = 0.0, False
-        for t in terms:
-            tfreq = ts.count(t)
-            if tfreq == 0:
-                continue
-            matched = True
-            w = (tfreq * (1.2 + 1.0)) / (
-                tfreq + 1.2 * (1.0 - 0.75 + 0.75 * dl[i] / avgdl)
-            )
-            idf_t = max(0.0, math.log((n_docs - df[t] + 0.5) / (df[t] + 0.5)))
-            score += idf_t * w
-        if matched:  # a zero score from floored IDF still ranks (last)
-            want_log[i] = score
+    # (libm), per the documented tier contract.  "engine" is in 3 of
+    # the 4 documents, so its raw ln IDF is NEGATIVE — the floor must
+    # zero it out, not let it subtract from scores.
+    assert sum("engine" in t for t in corpus.values()) > len(corpus) / 2
+    want_log = _bm25_reference(corpus, terms, idf="log")
     assert want_log[2] == 0.0  # doc 2 matches only the common term
     got_log = {
         r["doc_id"]: r["score"]
@@ -1816,6 +1822,46 @@ def test_bm25_matches_integer_definition(spark):
 
     with pytest.raises(ValueError, match="idf must be"):
         bm25_topk(sdf, terms, idf="plain")
+
+
+@pytest.mark.parametrize("idf", ["rational", "log"])
+def test_bm25_edge_cases_match_definition(spark, idf):
+    """bm25_topk against the pure-Python definition on the edge cases
+    of its input: string ids, a NULL text and a text with no tokens
+    (both outside ``n_docs`` and the average length), a query term no
+    document contains (df = 0, contributing nothing), and a ``k`` that
+    cuts inside a score tie, which the id breaks."""
+    from gather_datawarehouse_sync_spark.operators.terms import bm25_topk
+
+    corpus = {
+        "a": "alpha beta beta gamma",
+        "b": "alpha",
+        "c": None,
+        "d": "!!! ???",
+        "e": "beta delta delta delta delta",
+        "t2": "beta gamma",
+        "t1": "beta gamma",
+        "t3": "beta gamma",
+        "z": "unrelated words only",
+    }
+    terms = ["alpha", "beta", "zebra"]
+    want = _bm25_reference(corpus, terms, idf=idf)
+    assert set(want) == {"a", "b", "e", "t1", "t2", "t3"}
+    ranked = sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))
+    k = [i for i, _ in ranked].index("t2") + 1
+    assert ranked[k - 1][1] == ranked[k][1]  # the cut splits the tie
+
+    sdf = spark.createDataFrame(list(corpus.items()), "doc_id string, text string")
+
+    def top(n):
+        rows = [(r["doc_id"], r["score"]) for r in bm25_topk(sdf, terms, k=n, idf=idf).collect()]
+        return sorted(rows, key=lambda kv: (-kv[1], kv[0]))
+
+    for n in (k, 100):
+        got = top(n)
+        assert [i for i, _ in got] == [i for i, _ in ranked[:n]], n
+        for (_, g), (_, w) in zip(got, ranked):
+            assert g == w if idf == "rational" else abs(g - w) < 1e-9
 
 
 def test_tfidf_topk_ordering_and_k(spark):

@@ -871,6 +871,37 @@ def test_shingle_lambdas_never_tokenize(spark, sf_dir):
     assert not any(tokenizing.values()), tokenizing
 
 
+@pytest.mark.parametrize("idf", ["rational", "log"])
+def test_bm25_scores_one_row_per_document(spark, sf_dir, idf):
+    """bm25_topk keeps each document one row: building it runs no SQL
+    execution (nothing is probed, collected or checkpointed), and its
+    executed plan explodes no tokens (no ``Generate``), shuffles no
+    (id, term) postings (no hash exchange), scans no Python-built frame
+    and evaluates no Python, and counts each query term by a lambda
+    over the projected token attribute — never over the tokenizer."""
+    from gather_datawarehouse_sync_spark.operators.terms import bm25_topk
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    built = []
+    assert _executed_plans(
+        spark,
+        lambda: built.append(bm25_topk(docs, ["dup", "vector", "line"], k=5, idf=idf)),
+    ) == []
+    rows = []
+    plans = _executed_plans(spark, lambda: rows.extend(built[0].collect()))
+    assert rows
+    nodes = [n.split("\n", 1)[0].strip() for p in plans for n in _final_nodes(p)]
+    assert not [
+        n
+        for n in nodes
+        if n.startswith("Generate")
+        or any(x in n for x in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython"))
+    ], nodes
+    assert not any("hashpartitioning(" in p for p in plans)
+    bodies = [b for p in plans for b in _lambda_bodies(p)]
+    assert bodies and not any("split(" in b for b in bodies)
+
+
 def _final_nodes(plan: str) -> list[str]:
     """The operator details of one formatted executed plan — for an
     adaptive plan, only the operators of its final plan — each without
