@@ -41,9 +41,10 @@ make the score order-dependent and break cross-engine hash comparison
 
 Tokenization is pluggable: the default is the unicode-aware
 :func:`...text.tokens`; oracle-compared paths pass
-:func:`ascii_tokens`, whose split regex is byte-identical to the
-DuckDB oracle's — with any other tokenizer the cross-engine sum is
-only guaranteed on corpora where the tokenizations coincide.
+:func:`...text.ascii_tokens` (re-exported here), whose split regex is
+byte-identical to the DuckDB oracle's — with any other tokenizer the
+cross-engine sum is only guaranteed on corpora where the tokenizations
+coincide.
 """
 
 from __future__ import annotations
@@ -54,21 +55,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gather_datawarehouse_sync_spark.functions.scalar import lit_map
-from gather_datawarehouse_sync_spark.functions.text import (
-    ascii_tokens as _text_ascii_tokens,
+
+# ascii_tokens is re-exported: callers pass it as the classifier's
+# oracle-parity tokenizer and import it from here
+from gather_datawarehouse_sync_spark.functions.text import (  # noqa: F401
+    ascii_tokens,
+    tokens,
 )
-from gather_datawarehouse_sync_spark.functions.text import tokens
-
-
-def ascii_tokens(text: Column) -> Column:
-    """ASCII tokenization (`[^a-z0-9]+` split, lowercased) — the repo's
-    oracle-parity tokenizer: byte-identical to the DuckDB
-    `regexp_split_to_array` the registered oracles run.  The default
-    :func:`...text.tokens` additionally keeps unicode letters/digits
-    and apostrophes, which the SQL oracles do not — pass THIS tokenizer
-    whenever the score must hash-match an oracle.  (Delegates to the
-    ONE shared definition in functions/text.py.)"""
-    return _text_ascii_tokens(text)
 
 #: Demo weight table: a tiny "educational value" lexicon in milli-units.
 #: A real deployment trains these (fastText / logistic regression) and

@@ -7,6 +7,13 @@ only string processing is path manipulation (SURVEY §2.9 F1-F9,
 Everything here is built-in-expression based (codegen'd, JVM-side); the
 one pandas UDF (``token_count_udf``) exists to exercise the UDF parity
 path (Q41) and as the template for genuinely Python-only logic.
+
+This module owns the oracle tokenizer (:func:`ascii_tokens`, the
+``[^a-z0-9]+`` split every DuckDB oracle runs) and the one word-window
+builder (:func:`ngrams_from_tokens`).  The gram helpers
+(:func:`repetition_bp`, :func:`duplicate_ngram_fraction`,
+:func:`fingerprint`) take a token-array column: callers project the
+tokens once per document, so no helper can re-tokenize per gram.
 """
 
 from __future__ import annotations
@@ -31,17 +38,19 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 
 def tokens(text: Column) -> Column:
-    """Whitespace/punct tokenization, lowercased (BPE-ish regex split)."""
+    """Unicode word tokenization, lowercased: splits on anything but
+    letters, digits and apostrophes.  Not the oracle tokenizer — a
+    result that must match a DuckDB oracle uses :func:`ascii_tokens`."""
     return F.array_remove(F.split(F.lower(text), r"[^\p{L}\p{N}']+"), "")
 
 
 def ascii_tokens(text: Column) -> Column:
     """THE oracle-parity tokenizer (``[^a-z0-9]+`` split, lowercased) —
     byte-identical to the DuckDB ``regexp_split_to_array`` every
-    registered oracle runs.  ONE named definition (r16 review find:
-    four inline copies across text/bpe/classify/dedup could silently
-    de-synchronize the cross-engine tokenization contract); every
-    oracle-facing consumer imports this."""
+    registered oracle runs.  The package's only definition of the
+    cross-engine tokenization contract (``tests/test_dead_code.py``
+    pins the pattern to this one literal); every oracle-facing
+    consumer imports this."""
     return F.array_remove(F.split(F.lower(text), r"[^a-z0-9]+"), "")
 
 
@@ -191,18 +200,15 @@ def _quality_score_bp(text: Column) -> Column:
     return (alpha_bp + word_bp + len_bp).cast("bigint")
 
 
-def repetition_bp(text: Column, n: int = 3) -> Column:
+def repetition_bp(toks: Column, n: int = 3) -> Column:
     """Gopher-style duplicated-``n``-gram fraction in exact integer
     basis points: ``10000·(total_grams − distinct_grams) DIV
     total_grams`` (0 for docs shorter than ``n`` tokens).  Complements
     the top-gram share (x_top_ngram) as the second standard repetition
     quality rule; zero shuffle — one scan-side projection — and exact
-    integers, so it hash-compares against a DuckDB oracle.
-
-    Column-returning over a text expression, so for ``n ≥ 2`` the
-    tokenizer reruns once per gram inside the :func:`word_ngrams`
-    lambda (see :func:`ngrams_from_tokens`)."""
-    g = word_ngrams(text, n)
+    integers, so it hash-compares against a DuckDB oracle when ``toks``
+    is a projected :func:`ascii_tokens` column."""
+    g = ngrams_from_tokens(toks, n)
     # widen to BIGINT before the ×10000: size() is INT and a ~215k-gram
     # doc overflows int32 (ANSI crash on Spark 4 defaults)
     total = F.size(g).cast("bigint")
@@ -453,18 +459,18 @@ def language_guess(text: Column, ascii_only: bool = False) -> Column:
     return expr
 
 
-def fingerprint(text: Column, window: int = 8) -> Column:
-    """Winnowing-style document fingerprint: xxhash64 of each word
-    ``window``-gram, keep the minimum — a stable rolling-hash signature
-    used for cheap containment checks.  Column-returning over a text
-    expression, so the tokenizer reruns once per gram inside the slice
-    lambda (see :func:`ngrams_from_tokens`)."""
-    toks = tokens(text)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(window - 1), F.lit(1))),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, window))),
+def fingerprint(toks: Column, window: int = 8) -> Column:
+    """Winnowing-style document fingerprint over a token-array column:
+    xxhash64 of each word ``window``-gram, keep the minimum — a stable
+    rolling-hash signature used for cheap containment checks.  A
+    document shorter than ``window`` hashes its whole joined token
+    string (``""`` when it has no tokens)."""
+    return F.coalesce(
+        F.array_min(
+            F.transform(ngrams_from_tokens(toks, window), lambda g: F.xxhash64(g))
+        ),
+        F.xxhash64(F.concat_ws(" ", toks)),
     )
-    return F.array_min(grams)
 
 
 def split_sentences_udtf():
@@ -504,22 +510,18 @@ def explode_sentences(df, text_col: str = "text", id_col: str = "doc_id"):
 
 
 def ngrams_from_tokens(toks: Column, n: int = 2) -> Column:
-    """ALL word n-grams (non-distinct, in order) over an
-    ALREADY-TOKENIZED array column — the form every DataFrame-level
-    site uses: project the token array first, then build grams from the
-    column.
+    """ALL word n-grams (non-distinct, in order) over a token-array
+    column — the package's one word-window builder.  Empty for a
+    document shorter than ``n`` tokens; ``n ≤ 1`` is the token array
+    itself.
 
-    The expression references its token array three times (the
-    short-doc guard, the sequence bound, and the slice inside the
-    ``transform`` lambda).  Spark evaluates a lambda body once per
-    ELEMENT with no subexpression elimination, so a tokenizer
-    expression in place of ``toks`` re-runs its regex split once per
-    gram — quadratic in the document length.  Under an ``explode``
-    the two outer references re-run it too (``GenerateExec`` has no
-    subexpression elimination at all).  Over a projected
-    attribute the tokenizer runs once per document; the projection
-    survives CollapseProject because this expression references it
-    more than once.
+    Pass a projected token attribute (``ascii_tokens(text).alias(...)``
+    one projection below), never a tokenizer expression: the array is
+    referenced inside the ``transform`` lambda, and Spark evaluates a
+    lambda body once per ELEMENT with no subexpression elimination, so
+    an inlined tokenizer would re-run its regex split once per gram.
+    The projection survives CollapseProject because this expression
+    references it more than once.
     """
     # guard short docs: sequence(1, 0) DESCENDS to [1, 0] and slice
     # throws on start=0 — emit an empty array instead
@@ -535,27 +537,13 @@ def ngrams_from_tokens(toks: Column, n: int = 2) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_ngrams(text: Column, n: int = 2) -> Column:
-    """ALL word n-grams (non-distinct, in order) over the ascii
-    tokenization the dedup/oracle surface uses (``[^a-z0-9]+`` split) —
-    the multiset the repetition metrics count over.  Empty result for
-    documents shorter than ``n`` tokens.  For ``n ≥ 2`` the tokenizer
-    sits inside the slice lambda and reruns once per gram (no
-    subexpression elimination reaches a lambda body — see
-    :func:`ngrams_from_tokens`); frame-level sites project
-    ``ascii_tokens(text)`` and call :func:`ngrams_from_tokens` over the
-    column instead."""
-    return ngrams_from_tokens(ascii_tokens(text), n)
-
-
-def duplicate_ngram_fraction(text: Column, n: int = 2) -> Column:
-    """Gopher-style repetition signal: the fraction of word ``n``-grams
-    that are repeats of an earlier occurrence (1 − distinct/total).
-    High values mark boilerplate/templated text.  Pure expression —
-    exact integer ratio, so the double is bit-stable across engines.
-    Like :func:`repetition_bp`, it is Column-returning over a text
-    expression: for ``n ≥ 2`` the tokenizer reruns once per gram."""
-    grams = word_ngrams(text, n)
+def duplicate_ngram_fraction(toks: Column, n: int = 2) -> Column:
+    """Gopher-style repetition signal over a token-array column: the
+    fraction of word ``n``-grams that are repeats of an earlier
+    occurrence (1 − distinct/total).  High values mark
+    boilerplate/templated text.  Pure expression — exact integer
+    ratio, so the double is bit-stable across engines."""
+    grams = ngrams_from_tokens(toks, n)
     total = F.size(grams)
     return F.when(
         total > 0,
@@ -736,21 +724,23 @@ def winnow_fingerprint_table(
 
 
 def char_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct character n-grams (for n-gram Jaccard on short strings).
-    Strings shorter than ``n`` contribute themselves as one gram (the
-    short-input fallback); the EMPTY string contributes nothing — the
-    naive formulation yields ``[""]`` there, a phantom gram that makes
-    any two empty strings Jaccard-identical."""
-    lowered = F.lower(text)
+    """Distinct character n-grams of ``text`` as given (for n-gram
+    Jaccard on short strings; a caller that wants case folding projects
+    ``lower(text)`` first, since the column is read inside the
+    ``transform`` lambda once per gram).  Strings shorter than ``n``
+    contribute themselves as one gram (the short-input fallback); the
+    EMPTY string contributes nothing — the naive formulation yields
+    ``[""]`` there, a phantom gram that makes any two empty strings
+    Jaccard-identical."""
     return F.when(
-        F.length(lowered) > 0,
+        F.length(text) > 0,
         F.array_distinct(
             F.transform(
                 F.sequence(
                     F.lit(1),
-                    F.greatest(F.length(lowered) - F.lit(n - 1), F.lit(1)),
+                    F.greatest(F.length(text) - F.lit(n - 1), F.lit(1)),
                 ),
-                lambda i: lowered.substr(i, F.lit(n)),
+                lambda i: text.substr(i, F.lit(n)),
             )
         ),
     ).otherwise(F.array().cast("array<string>"))

@@ -24,10 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gather_datawarehouse_sync_spark.operators.dedup import (
-    shingles_from_tokens,
-    tokens,
-)
+from gather_datawarehouse_sync_spark.functions.text import ascii_tokens
+from gather_datawarehouse_sync_spark.operators.dedup import shingles_from_tokens
 
 
 def ngram_containment(
@@ -48,7 +46,7 @@ def ngram_containment(
     # re-evaluates the tokenizer per reference (3× per doc inlined) —
     # see functions.text.ngrams_from_tokens
     bench = (
-        benchmark.select(tokens(F.col(text_col)).alias("__toks"))
+        benchmark.select(ascii_tokens(F.col(text_col)).alias("__toks"))
         .select(F.explode(shingles_from_tokens(F.col("__toks"), n)).alias("sh"))
         .distinct()
         .withColumn("__hit", F.lit(1))
@@ -59,7 +57,7 @@ def ngram_containment(
     # so it parallelizes (no-op on a well-partitioned corpus)
     corp = (
         spread(corpus)
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+        .select(F.col(id_col), ascii_tokens(F.col(text_col)).alias("__toks"))
         .select(
             F.col(id_col),
             F.explode(shingles_from_tokens(F.col("__toks"), n)).alias("sh"),

@@ -29,6 +29,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gather_datawarehouse_sync_spark.functions.text import (
+    ascii_tokens,
+    ngrams_from_tokens,
+)
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup (D1)
@@ -120,53 +125,14 @@ from gather_datawarehouse_sync_spark.session import spread  # noqa: E402,F401
 # Shared text shingling helpers (JVM-side expressions only — no Python UDFs)
 # ---------------------------------------------------------------------------
 
-def tokens(col: Column) -> Column:
-    """Lowercased word tokens; empty strings removed."""
-    return F.array_remove(F.split(F.lower(col), r"[^a-z0-9]+"), "")
-
-
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """:func:`shingles` over an ALREADY-TOKENIZED array column — the
-    form every DataFrame-level site uses: project
-    ``tokens(text).alias("__toks")`` first, then shingle
-    ``F.col("__toks")``.
-
-    For ``n ≥ 2`` the token array is referenced inside the ``transform``
-    lambda, and Spark evaluates a lambda body once per ELEMENT with no
-    subexpression elimination: a tokenizer expression in place of
-    ``toks`` re-runs its regex split once per gram — quadratic in the
-    document length.  Over an attribute the lambda only slices.  The
-    token projection survives CollapseProject because this expression
-    references it more than once (the same holds below a Generate,
-    which has no subexpression elimination at all)."""
-    if n <= 1:
-        return F.array_distinct(toks)
-    # slide an n-window over the token array with transform + slice
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as strings (distinct).
-
-    Documents shorter than ``n`` tokens yield an EMPTY array: the naive
-    ``sequence(1, greatest(size-n+1, 0))`` formulation descends to
-    ``[1, 0]`` there and ``slice`` throws on start 0 (latent until a
-    corpus with sub-``n`` docs hits it).
-
-    Over a text expression the tokenizer sits inside the slice lambda
-    and re-runs once per gram (see :func:`shingles_from_tokens`); fine
-    for short strings and ``n = 1``, but frame-level sites project the
-    token array and call :func:`shingles_from_tokens` instead.
-    """
-    return shingles_from_tokens(tokens(col), n)
+    """Distinct word ``n``-gram shingles over a token-array column
+    (:func:`...functions.text.ngrams_from_tokens`, deduplicated):
+    empty for documents shorter than ``n`` tokens.  Project
+    ``ascii_tokens(text).alias("__toks")`` first and shingle
+    ``F.col("__toks")`` — see ``ngrams_from_tokens`` for why the token
+    array must be an attribute."""
+    return F.array_distinct(ngrams_from_tokens(toks, n))
 
 
 # ---------------------------------------------------------------------------
@@ -339,7 +305,7 @@ def _vocabulary(
     projection below the explode (``GenerateExec`` has no subexpression
     elimination)."""
     vocab = (
-        texts.select(tokens(F.col(text_col)).alias("__toks"))
+        texts.select(ascii_tokens(F.col(text_col)).alias("__toks"))
         .select(
             F.explode(shingles_from_tokens(F.col("__toks"), ngram)).alias("tok")
         )
@@ -371,7 +337,7 @@ def _side_tokens(
             .select(
                 F.lit(side).alias("side"),
                 F.col(id_col).alias("id"),
-                tokens(F.col(text_col)).alias("__toks"),
+                ascii_tokens(F.col(text_col)).alias("__toks"),
             )
             .select(
                 "side",
@@ -455,7 +421,7 @@ def _jaccard_join(
             # on n would be pushed down with the tokenizer substituted
             # into the shingle lambda
             avg_set = (
-                texts.select(tokens(F.col(text_col)).alias("__toks"))
+                texts.select(ascii_tokens(F.col(text_col)).alias("__toks"))
                 .filter(F.size("__toks") >= max(ngram, 1))
                 .select(
                     F.size(shingles_from_tokens(F.col("__toks"), ngram)).alias("n")
@@ -578,7 +544,7 @@ def _bitset_pairs(
         # former explode → literal-map index → collect_set aggregate
         # shuffled every token just to rebuild per-doc sets the array
         # already was (r18; the mask checkpoint job becomes a narrow
-        # scan).  n = size(toks): shingles() output is distinct and
+        # scan).  n = size(toks): shingles_from_tokens is distinct and
         # the vocabulary covers it by construction.  Per-doc cost is
         # V·|toks| codegen string compares — bounded by 64·|toks|.
         masks = tok.select(
@@ -814,7 +780,9 @@ def minhash_signatures(
     # document instead of one per gram — see shingles_from_tokens)
     return (
         spread(df)
-        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks"))
+        .select(
+            F.col(id_col).alias("id"), ascii_tokens(F.col(text_col)).alias("__toks")
+        )
         .select("id", _minhash(base).alias("signature"))
     )
 
@@ -1275,71 +1243,40 @@ def _union_find_local(g: DataFrame, id_type: "T.DataType", spark) -> DataFrame:
     covering every edge-touched node, with ``h`` = the component's
     minimum id.
 
-    Integer ids (every registered caller) take the vectorized path:
-    the edge list crosses as ONE Arrow table (no Row materialization)
+    The edge list crosses as ONE Arrow table (no Row materialization)
     and components resolve by numpy min-label propagation with pointer
     jumping — labels are indices into the SORTED unique-node array, so
-    the per-component minimum index IS the minimum id.  Other id types
-    fall back to a pure-Python union-by-min union-find (the larger
-    root always attaches under the smaller, so ``find(x)`` is the
-    component minimum; Python ``<`` on str matches Spark's UTF-8 byte
-    order because UTF-8 preserves code point order)."""
-    if isinstance(id_type, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        tbl = g.toArrow()
-        a = tbl.column("a").to_numpy(zero_copy_only=False).astype(np.int64)
-        b = tbl.column("b").to_numpy(zero_copy_only=False).astype(np.int64)
-        nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ea, eb = inv[: len(a)], inv[len(a):]
-        label = np.arange(len(nodes), dtype=np.int64)
-        while True:
-            m = np.minimum(label[ea], label[eb])
-            before = label.copy()
-            np.minimum.at(label, ea, m)
-            np.minimum.at(label, eb, m)
-            while True:  # pointer jumping: full path compression
-                nl = label[label]
-                if np.array_equal(nl, label):
-                    break
-                label = nl
-            if np.array_equal(label, before):
+    the per-component minimum index IS the minimum id.  Any orderable
+    id type works: ``np.unique`` sorts string ids (an object array) by
+    Python ``<``, i.e. by code point, which matches Spark's UTF-8 byte
+    order because UTF-8 preserves code point order."""
+    tbl = g.toArrow()
+    a = tbl.column("a").to_numpy(zero_copy_only=False)
+    b = tbl.column("b").to_numpy(zero_copy_only=False)
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = inv[: len(a)], inv[len(a):]
+    label = np.arange(len(nodes), dtype=np.int64)
+    while True:
+        m = np.minimum(label[ea], label[eb])
+        before = label.copy()
+        np.minimum.at(label, ea, m)
+        np.minimum.at(label, eb, m)
+        while True:  # pointer jumping: full path compression
+            nl = label[label]
+            if np.array_equal(nl, label):
                 break
-        # Arrow path back too (r19): a Python list of tuples through the
-        # pickle serializer cost ~0.4 s per call at a few thousand nodes
-        # (row-by-row conversion + schema verification); a pandas frame
-        # under the session's Arrow flag crosses as one batch
-        mapping_pdf = pd.DataFrame(
-            {"id": nodes, "h": nodes[label]}
-        )
-        schema = T.StructType(
-            [T.StructField("id", id_type), T.StructField("h", id_type)]
-        )
-        return spark.createDataFrame(mapping_pdf, schema)
-    else:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        nodes_set = set()
-        for r in g.collect():
-            x, y = r[0], r[1]
-            nodes_set.add(x)
-            nodes_set.add(y)
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                if ry < rx:
-                    rx, ry = ry, rx
-                parent[ry] = rx
-        mapping = [(x, find(x)) for x in nodes_set]
+            label = nl
+        if np.array_equal(label, before):
+            break
+    # Arrow path back too (r19): a Python list of tuples through the
+    # pickle serializer cost ~0.4 s per call at a few thousand nodes
+    # (row-by-row conversion + schema verification); a pandas frame
+    # under the session's Arrow flag crosses as one batch
+    mapping_pdf = pd.DataFrame({"id": nodes, "h": nodes[label]})
     schema = T.StructType(
         [T.StructField("id", id_type), T.StructField("h", id_type)]
     )
-    return spark.createDataFrame(mapping, schema)
+    return spark.createDataFrame(mapping_pdf, schema)
 
 
 def connected_components(
@@ -1379,10 +1316,10 @@ def connected_components(
     checkpoint materializations per round).  Once the live edge count
     is ≤ ``local_edges_max`` the remaining closure runs as ONE bounded
     driver-side pass (:func:`_union_find_local`: Arrow-collected numpy
-    min-label propagation for integer ids, union-by-min union-find
-    otherwise) whose result plugs into the same label-composition step
-    a distributed round would — identical output by the min invariant
-    (pinned against the distributed path in tests).  Driver memory is
+    min-label propagation, any orderable id type) whose result plugs
+    into the same label-composition step a distributed round would —
+    identical output by the min invariant (pinned against the
+    distributed path in tests).  Driver memory is
     bounded by the threshold (~16 MB of int64 edge arrays at the 1M
     default), the same bounded-metadata class as the engine's other
     gated collects; at
@@ -1518,7 +1455,7 @@ def _token_set_base(
             F.col(id_col),
             F.col(text_col),
             *( [c.alias(n) for n, c in extra.items()] if extra else [] ),
-            tokens(F.col(text_col)).alias("__toks"),
+            ascii_tokens(F.col(text_col)).alias("__toks"),
         )
         .select(
             F.col(id_col),
@@ -1954,7 +1891,7 @@ def simhash(
     # nondeterministic marking pins ONE evaluation (see _minhash above)
     _simhash = _simhash.asNondeterministic()
 
-    toks = tokens(F.col(text_col))
+    toks = ascii_tokens(F.col(text_col))
     if hash_mode == "portable":
         base = F.transform(
             toks,
@@ -2056,22 +1993,22 @@ def edit_distance_pairs(
 def _positioned_md5_grams(n: int) -> "Column":
     """The ONE positioned-md5-n-gram expression every span operator
     shares (detect, reference keys, cross-corpus): 0-based positions
-    zip with md5 keys via posexplode.  Stored-artifact parity
-    (reference_gram_keys ≡ the probe side of duplicate_spans_against)
-    holds because both sides use THIS expression, not hand-synced
-    copies.  Input column: ``__toks``."""
+    zip with the md5 of each ``ngrams_from_tokens`` window via
+    posexplode.  Stored-artifact parity (reference_gram_keys ≡ the
+    probe side of duplicate_spans_against) holds because both sides
+    use THIS expression, not hand-synced copies.  Input column:
+    ``__toks``."""
     return F.posexplode(
-        F.transform(
-            F.sequence(F.lit(1), F.size("__toks") - F.lit(n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("__toks"), i, n))),
-        )
+        F.transform(ngrams_from_tokens(F.col("__toks"), n), lambda g: F.md5(g))
     )
 
 
 def _tokenized(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, __toks) rows with ≥ n tokens — the shared span-operator base."""
     return spread(
-        df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks"))
+        df.select(
+            F.col(id_col).alias("id"), ascii_tokens(F.col(text_col)).alias("__toks")
+        )
     ).filter(F.size("__toks") >= n)
 
 
@@ -2196,7 +2133,7 @@ def cut_duplicate_spans(
     span_lists = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
-    base = df.select(id_col, tokens(F.col(text_col)).alias("__toks")).join(
+    base = df.select(id_col, ascii_tokens(F.col(text_col)).alias("__toks")).join(
         span_lists, id_col, "left"
     )
     # position i (0-based) survives unless some span covers it
@@ -2400,7 +2337,7 @@ def reference_gram_keys(
     if n < 1:
         raise ValueError("n must be >= 1")
     base = spread(
-        reference.select(tokens(F.col(text_col)).alias("__toks"))
+        reference.select(ascii_tokens(F.col(text_col)).alias("__toks"))
     ).filter(F.size("__toks") >= n)
     # the SAME positioned-gram expression the probe side uses (position
     # dropped): stored keys and probe keys cannot drift

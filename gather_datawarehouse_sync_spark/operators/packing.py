@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gather_datawarehouse_sync_spark.functions.text import ascii_tokens
+
 
 def exclusive_prefix_sum(
     df: DataFrame,
@@ -122,7 +124,7 @@ def chunk_spans(
     UDFs, no per-doc state: scales with token count."""
     if chunk_tokens <= 0 or stride <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
-    toks = F.array_remove(F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), "")
+    toks = ascii_tokens(F.col(text_col))
     tok_rows = df.select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"))
     lo = F.greatest(
         F.ceil((F.col("pos") - F.lit(chunk_tokens - 1)) / F.lit(stride)), F.lit(0)

@@ -39,7 +39,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gather_datawarehouse_sync_spark.operators.dedup import spread, tokens
+from gather_datawarehouse_sync_spark.functions.text import ascii_tokens
+from gather_datawarehouse_sync_spark.operators.dedup import spread
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -595,25 +596,14 @@ def ivf_topk(
     n_cells = len(C)
     _probe_cells = _probe_cells_udf(Cn, min(nprobe, n_cells))
 
-    if lists is not None:
-        c = lists.select(
-            F.col("cell"),
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-        )
-    else:
-        cell = _cell_udf(Cn)
-        c = spread(corpus).select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            cell(F.col(vec_col)).alias("cell"),
-        )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         F.explode(_probe_cells(F.col(vec_col))).alias("cell"),
     )
-    if lists is not None:
+    if lists is None:
+        lists = ivf_invert(corpus, C, id_col, vec_col)
+    else:
         # serving path: the query batch is small by assumption (that is
         # what "serving" means); broadcasting it makes the lists side
         # the streamed side of a BroadcastHashJoin, which lets dynamic
@@ -621,6 +611,11 @@ def ivf_topk(
         # lists' PartitionFilters — the scan then reads only the
         # nprobe/nlist probed partitions (plan-pinned in tests).
         q = F.broadcast(q)
+    c = lists.select(
+        F.col("cell"),
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("__cv"),
+    )
     cand = (
         q.join(c, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -2004,7 +1999,8 @@ def hybrid_rrf_topk(
         # must see the same tokens the dedup/quality operators see
         tf = F.size(
             F.filter(
-                tokens(F.col(text_col)), lambda x: F.array_contains(terms, x)
+                ascii_tokens(F.col(text_col)),
+                lambda x: F.array_contains(terms, x),
             )
         )
         t_cand = (

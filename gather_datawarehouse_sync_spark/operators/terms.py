@@ -31,14 +31,16 @@ def term_counts(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Per-(document, term) frequencies over the ascii tokenization the
-    dedup/oracle surface shares (``operators.dedup.tokens`` — one
+    dedup/oracle surface shares (``functions.text.ascii_tokens`` — one
     definition, so the cross-engine hash contract cannot drift)."""
-    from gather_datawarehouse_sync_spark.operators.dedup import tokens
+    from gather_datawarehouse_sync_spark.functions.text import ascii_tokens
     from gather_datawarehouse_sync_spark.session import spread
 
     return (
         spread(docs)
-        .select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
+        .select(
+            F.col(id_col), F.explode(ascii_tokens(F.col(text_col))).alias("term")
+        )
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -148,7 +150,7 @@ def bm25_topk(
     Returns (``id_col``, score) — ``scale``-scaled integer units for
     ``"rational"``, plain double for ``"log"``.
     """
-    from gather_datawarehouse_sync_spark.operators.dedup import tokens
+    from gather_datawarehouse_sync_spark.functions.text import ascii_tokens
     from gather_datawarehouse_sync_spark.session import spread
 
     if idf not in ("rational", "log"):
@@ -170,7 +172,9 @@ def bm25_topk(
     # text) — ANSI crash on Spark 4 defaults
     per_doc = (
         spread(docs)
-        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+        .select(
+            F.col(id_col).alias("id"), ascii_tokens(F.col(text_col)).alias("toks")
+        )
         .select(
             "id",
             F.size("toks").cast("bigint").alias("dl"),

@@ -49,7 +49,10 @@ from gather_datawarehouse_sync_spark.operators.dedup import (
     mark_duplicates,
 )
 from gather_datawarehouse_sync_spark.operators.similarity import brute_force_topk
-from gather_datawarehouse_sync_spark.functions.text import token_count_udf
+from gather_datawarehouse_sync_spark.functions.text import (
+    ascii_tokens,
+    token_count_udf,
+)
 
 SparkFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1390,7 +1393,6 @@ def _x_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gather_datawarehouse_sync_spark.operators.dedup import (
         remove_frequent_units,
-        shingles,
     )
     from gather_datawarehouse_sync_spark.operators.sampling import (
         temperature_resample,
@@ -1417,7 +1419,8 @@ def _x_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             F.concat_ws(
-                " ", F.array_sort(shingles(F.col("clean_text"), 1))
+                " ",
+                F.array_sort(F.array_distinct(ascii_tokens(F.col("clean_text")))),
             ).alias("gkey"),
             quality_score_bp(F.col("clean_text")).cast("bigint").alias("q"),
         )
@@ -2016,14 +2019,10 @@ def _x_twotier_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t["embeddings"].withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
-    from gather_datawarehouse_sync_spark.operators.dedup import (
-        tokens as _dedup_tokens,
-    )
-
     cand = cosine_pairs(emb, threshold=0.45).select("a", "b")
     toks = t["documents"].select(
         F.col("doc_id"),
-        F.array_distinct(_dedup_tokens(F.col("text"))).alias("ts"),
+        F.array_distinct(ascii_tokens(F.col("text"))).alias("ts"),
     )
     ta = toks.select(F.col("doc_id").alias("a"), F.col("ts").alias("ta"))
     tb = toks.select(F.col("doc_id").alias("b"), F.col("ts").alias("tb"))
@@ -2598,7 +2597,6 @@ def _x_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`functions.text.fingerprint` variant stays available for
     compactness when cross-engine parity is not needed."""
     from gather_datawarehouse_sync_spark.functions.text import (
-        ascii_tokens,
         language_guess,
         ngrams_from_tokens,
         quality_score_bp,
@@ -2713,14 +2711,11 @@ def _x_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The gram array is evaluated exactly ONCE per document: the total
     gram count is recovered as the window SUM of the per-gram counts
-    rather than a second ``size(word_ngrams(...))`` projection —
+    rather than a second ``size(ngrams_from_tokens(...))`` projection —
     CollapseProject would otherwise inline the whole tokenize+transform
     expression above the Generate and re-evaluate it for every exploded
     row (O(len²) per document; measured 54 s → sub-second at sf0.01)."""
-    from gather_datawarehouse_sync_spark.functions.text import (
-        ascii_tokens,
-        ngrams_from_tokens,
-    )
+    from gather_datawarehouse_sync_spark.functions.text import ngrams_from_tokens
     from gather_datawarehouse_sync_spark.session import spread
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
@@ -2816,7 +2811,8 @@ def _x_rep_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     return (
-        docs.select("doc_id", repetition_bp(F.col("text"), 3).alias("rep_bp"))
+        docs.select("doc_id", ascii_tokens(F.col("text")).alias("__toks"))
+        .select("doc_id", repetition_bp(F.col("__toks"), 3).alias("rep_bp"))
         .orderBy("doc_id")
     )
 
@@ -3587,12 +3583,8 @@ def _x_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyword-stuffed or template text.  Zero shuffle (scan-side
     projection); BIGINT widening before the ×10000 per the bp
     convention."""
-    from gather_datawarehouse_sync_spark.operators.dedup import (
-        tokens as _dedup_tokens,
-    )
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    toks = _dedup_tokens(F.col("text"))
+    toks = ascii_tokens(F.col("text"))
     total = F.size(toks).cast("bigint")
     distinct = F.size(F.array_distinct(toks)).cast("bigint")
     ttr = F.when(
@@ -6389,7 +6381,7 @@ def _x_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     toks = docs.select(
         "doc_id",
-        F.size(F.array_remove(F.split(F.lower("text"), r"[^a-z0-9]+"), ""))
+        F.size(ascii_tokens(F.col("text")))
         .cast("long")
         .alias("tokens"),
     )
@@ -6721,9 +6713,7 @@ def _x_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exercised in tests where approximation contracts belong."""
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     toks = docs.select(
-        F.explode(
-            F.array_remove(F.split(F.lower("text"), r"[^a-z0-9]+"), "")
-        ).alias("tok")
+        F.explode(ascii_tokens(F.col("text"))).alias("tok")
     )
     return (
         toks.groupBy("tok")
@@ -7134,10 +7124,7 @@ def _x_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines.  One narrow pass, no shuffle (map-literal realization;
     the broadcast-join realization for fastText-sized vocabularies is
     parity-pinned in tests/test_classify.py)."""
-    from gather_datawarehouse_sync_spark.functions.classify import (
-        ascii_tokens,
-        classify_documents,
-    )
+    from gather_datawarehouse_sync_spark.functions.classify import classify_documents
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     # ascii_tokens: byte-identical split to the oracle's
@@ -7508,9 +7495,7 @@ def _x_mg_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     toks = docs.select(
-        F.explode(
-            F.array_remove(F.split(F.lower("text"), r"[^a-z0-9]+"), "")
-        ).alias("tok")
+        F.explode(ascii_tokens(F.col("text"))).alias("tok")
     )
     return (
         mg_heavy_hitters(toks, "tok", eps_milli=5)
@@ -7539,7 +7524,6 @@ def _x_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the stripped text → weighted source interleave, as ONE lazy DAG
     (pipelines.pretrain_mix).  The oracle replays every stage in SQL, so
     the differential covers stage interaction, not just each stage."""
-    from gather_datawarehouse_sync_spark.functions.classify import ascii_tokens
     from gather_datawarehouse_sync_spark.pipelines import pretrain_mix
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]

@@ -53,3 +53,22 @@ def test_every_top_level_name_is_referenced_outside_its_definition():
                 rel = os.path.relpath(path, _REPO)
                 unreferenced.append(f"{rel}:{node.lineno} {node.name}")
     assert not unreferenced, unreferenced
+
+
+def test_oracle_tokenizer_pattern_is_spelled_once():
+    """The oracle tokenizer's split pattern is one string constant in
+    the package (``functions.text.ascii_tokens``): every other consumer
+    calls that function, so the cross-engine tokenization contract has
+    one definition.  SQL oracle strings carry the pattern inside longer
+    literals and do not count."""
+    sites = []
+    for path in _py_files():
+        if not path.startswith(_PACKAGE + os.sep):
+            continue
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        sites += [
+            f"{os.path.relpath(path, _REPO)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant) and node.value == "[^a-z0-9]+"
+        ]
+    assert len(sites) == 1, sites

@@ -398,17 +398,24 @@ def test_connected_components_matches_union_find(spark, shape):
     assert got == _union_find_components(pairs)
 
 
-@pytest.mark.parametrize("shape", ["path", "clique_mix", "random"])
+@pytest.mark.parametrize("shape", ["path", "clique_mix", "random", "strings"])
 def test_connected_components_local_finish_matches_distributed(spark, shape):
     """The r18 local-finish threshold must be invisible in the output:
     the same graph resolved fully distributed (local_edges_max=0), fully
     locally (threshold above the edge count — the default at test
     scale), and through the HYBRID path (threshold crossed after one
-    contraction round) must agree row-for-row."""
+    contraction round) must agree row-for-row.  The ``strings`` case is
+    a random graph over non-ASCII string ids: the local finish orders
+    them by code point, which must agree with Spark's UTF-8 byte order
+    (U+FF21 sorts before U+1F600 in both, after it in UTF-16)."""
     import random as _random
 
     rng = _random.Random(hash(shape) & 0xFFFF)
     ids = rng.sample(range(100000), 300)
+    id_type = "long"
+    if shape == "strings":
+        ids = [("é", "\uff21", "\U0001F600")[x % 3] + str(x) for x in ids]
+        id_type = "string"
     if shape == "path":
         pairs = {(ids[i], ids[i + 1]) for i in range(len(ids) - 1)}
     elif shape == "clique_mix":
@@ -422,7 +429,7 @@ def test_connected_components_local_finish_matches_distributed(spark, shape):
             a, b = rng.choice(ids), rng.choice(ids)
             if a != b:
                 pairs.add((min(a, b), max(a, b)))
-    edges = spark.createDataFrame(sorted(pairs), "a long, b long")
+    edges = spark.createDataFrame(sorted(pairs), f"a {id_type}, b {id_type}")
     distributed = {
         r["id"]: r["component"]
         for r in connected_components(edges, local_edges_max=0).collect()
@@ -646,7 +653,11 @@ def test_fingerprint_stable_and_discriminative(spark):
         [(1, _DOCS[0][1]), (2, _DOCS[0][1]), (3, _DOCS[2][1])],
         "id long, text string",
     )
-    fps = {r["id"]: r["fp"] for r in df.select("id", text.fingerprint(F.col("text")).alias("fp")).collect()}
+    toks = df.select("id", text.tokens(F.col("text")).alias("toks"))
+    fps = {
+        r["id"]: r["fp"]
+        for r in toks.select("id", text.fingerprint(F.col("toks")).alias("fp")).collect()
+    }
     assert fps[1] == fps[2]
     assert fps[1] != fps[3]
 
@@ -657,9 +668,9 @@ def test_char_ngrams(spark):
     )
     got = {
         r["id"]: set(r["g"])
-        for r in df.select(
-            "id", text.char_ngrams(F.col("t"), 3).alias("g")
-        ).collect()
+        for r in df.select("id", F.lower("t").alias("t"))
+        .select("id", text.char_ngrams(F.col("t"), 3).alias("g"))
+        .collect()
     }
     assert got[1] == {"abc", "bcd"}
     assert got[2] == {"ab"}  # short-input fallback: the string itself
@@ -1184,9 +1195,9 @@ def test_duplicate_ngram_fraction(spark):
     )
     got = [
         round(r["f"], 4)
-        for r in df.select(
-            text.duplicate_ngram_fraction(F.col("t"), 2).alias("f")
-        ).collect()
+        for r in df.select(text.ascii_tokens(F.col("t")).alias("toks"))
+        .select(text.duplicate_ngram_fraction(F.col("toks"), 2).alias("f"))
+        .collect()
     ]
     assert got == [0.6, 0.0, 0.0]
 
@@ -1216,13 +1227,17 @@ def test_ngram_containment_exact_and_partial(spark):
 
 
 def test_shingles_and_word_ngrams_short_docs_empty(spark):
-    from gather_datawarehouse_sync_spark.operators.dedup import shingles
+    from gather_datawarehouse_sync_spark.operators.dedup import shingles_from_tokens
 
     df = spark.createDataFrame([("one two",), ("one",), ("",)], "t string")
-    rows = df.select(
-        shingles(F.col("t"), 3).alias("sh"),
-        text.word_ngrams(F.col("t"), 3).alias("ng"),
-    ).collect()
+    rows = (
+        df.select(text.ascii_tokens(F.col("t")).alias("toks"))
+        .select(
+            shingles_from_tokens(F.col("toks"), 3).alias("sh"),
+            text.ngrams_from_tokens(F.col("toks"), 3).alias("ng"),
+        )
+        .collect()
+    )
     assert all(r["sh"] == [] and r["ng"] == [] for r in rows)
 
 
@@ -2900,7 +2915,10 @@ def test_duplicate_spans_known_passages_and_edges(spark):
 def test_repetition_bp_exact_counts(spark):
     """repetition_bp = 10000·(total−distinct) DIV total over word
     n-grams; 0 for docs shorter than n tokens."""
-    from gather_datawarehouse_sync_spark.functions.text import repetition_bp
+    from gather_datawarehouse_sync_spark.functions.text import (
+        ascii_tokens,
+        repetition_bp,
+    )
 
     df = spark.createDataFrame(
         [
@@ -2912,9 +2930,9 @@ def test_repetition_bp_exact_counts(spark):
     )
     got = {
         r["doc_id"]: r["bp"]
-        for r in df.select(
-            "doc_id", repetition_bp(F.col("text"), 2).alias("bp")
-        ).collect()
+        for r in df.select("doc_id", ascii_tokens(F.col("text")).alias("toks"))
+        .select("doc_id", repetition_bp(F.col("toks"), 2).alias("bp"))
+        .collect()
     }
     assert got == {1: 6000, 2: 0, 3: 0}
 

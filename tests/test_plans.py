@@ -437,15 +437,12 @@ def test_agg_state_merge_two_phase_no_extra_exchange(spark, sf_dir):
 
 def test_rep_frac_is_shuffle_free(spark, sf_dir):
     """The Gopher duplicated-gram fraction is a pure scan-side
-    projection — both gram counts evaluate inside the scan stage, no
-    Exchange anywhere (the ORDER BY is the only allowed exchange and
-    exists solely for deterministic driver comparison)."""
-    from gather_datawarehouse_sync_spark.functions.text import repetition_bp
-
-    df = load_table(spark, sf_dir, "documents").select(
-        "doc_id", repetition_bp(F.col("text"), 3).alias("rep_bp")
-    )
-    assert shuffle_count(df) == 0
+    projection — both gram counts evaluate inside the scan stage, and
+    the registry query's ORDER BY (there solely for deterministic
+    driver comparison) is its only Exchange."""
+    plan = plan_str(REGISTRY["x_rep_frac"].spark(spark, sf_dir), "simple")
+    exchanges = re.findall(r"\bExchange \w+", plan)
+    assert exchanges == ["Exchange rangepartitioning"], exchanges
 
 
 def test_cluster_split_serves_from_stored_map(spark, sf_dir, tmp_path, monkeypatch):
@@ -833,7 +830,7 @@ def test_shingle_lambdas_never_tokenize(spark, sf_dir):
     the document length.  Checked over every execution of the MinHash
     signatures, both exact-Jaccard tiers (the default gate — bitset
     here, after its density probe — and the prefix tier) and the
-    exact-set clusters."""
+    exact-set clusters, and over x_rep_frac's repetition score."""
     import random
 
     from gather_datawarehouse_sync_spark.operators.dedup import (
@@ -858,6 +855,7 @@ def test_shingle_lambdas_never_tokenize(spark, sf_dir):
             docs, threshold=0.5, ngram=3, bitset_vocab_limit=0
         ),
         "clusters": lambda: jaccard_dedup_clusters(docs, threshold=0.5, ngram=3),
+        "x_rep_frac": lambda: REGISTRY["x_rep_frac"].spark(spark, sf_dir),
     }
     tokenizing = {}
     for name, build in cases.items():
